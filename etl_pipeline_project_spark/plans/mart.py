@@ -14,9 +14,9 @@ the reference's build (with its quirks fixed by design):
 - Q8: all loads are idempotent overwrites (sinks are the caller's concern;
   these builders return DataFrames).
 
-Scale notes: the five source tables are cached by `build_mart` because
-eleven sub-plans share them (the reference instead re-reads `places` from
-the DB — `data/transformation_dw.py:265`). The one join (fact_twitter ⟕
+Scale notes: nothing is cached — each table's plan scans its sources with
+only its own columns and filters pushed down (a cache would materialise
+every source column, long texts too). The one join (fact_twitter ⟕
 dim-side places) broadcasts the projected dim. Everything else is
 shuffle-free except the dedup exchanges.
 """
@@ -221,9 +221,7 @@ _BUILDERS = {
 }
 
 
-def build_mart(ops: dict[str, DataFrame], *, cache_sources: bool = True) -> dict[str, DataFrame]:
-    """All eleven mart tables. Sources are cached once — eleven consumers
-    (the reference re-reads its inputs per table)."""
-    if cache_sources:
-        ops = {name: df.cache() for name, df in ops.items()}
+def build_mart(ops: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """All eleven mart tables, each a lazy plan over ``ops`` that scans only
+    the source columns it projects; nothing is cached."""
     return {name: fn(ops) for name, fn in _BUILDERS.items()}

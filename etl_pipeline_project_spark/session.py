@@ -9,6 +9,8 @@ bench, driver contract, pipelines) runs with the same semantics:
 - AQE on — runtime shuffle coalescing + skew-join handling, the 100 TB
   safety net for the star-schema joins.
 - Arrow on — vectorized pandas interchange for the Pandas-UDF operators.
+- ANSI on — overflow and invalid casts fail the query instead of turning
+  into NULLs; the exact-sum contract of `weighted_exact_sum` relies on it.
 - shuffle.partitions sized to cores for local mode (driver/bench override
   via SPARK_GRAFT_CPUS); a real cluster deployment would size this to
   ~2-3× total cores and rely on AQE coalescing.
@@ -45,6 +47,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Driver testdata stores some timestamps as parquet TIMESTAMP(NANOS),
         # which Spark's vectorized reader rejects; read them as long nanos and

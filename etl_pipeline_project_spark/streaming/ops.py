@@ -33,26 +33,29 @@ _mem_counter = itertools.count()
 
 
 def stream_state_partitions(spark: SparkSession) -> str | None:
-    """State-store parallelism for locally driven streams, or ``None`` for
-    "leave the session's sizing alone". Structured Streaming fixes the
-    number of state partitions at stream start from
-    ``spark.sql.shuffle.partitions``; every micro-batch then pays a
-    per-partition store open/commit, so a 32-partition store on a
-    hundred-row local batch is ~4× pure setup (measured on
-    q_stream_stream_join in round 9: 14 s → 4 s at 8 partitions, zero
-    semantic change — state partitioning is internal to the store).
-    Round 12 centralized that adjudicated pattern for every locally
-    driven stream; round 13 scopes the literal 8 to LOCAL masters only
-    (the measured micro-batch regime). On a cluster the default is to
-    NOT override — a forgotten env var must never pin a 100 TB stream's
-    state store to 8 partitions (r12 verdict item 2); production sizes
-    state to stream throughput via the env override, exactly like any
-    shuffle sizing call."""
+    """State-store partition count for locally driven streams, or ``None``
+    to leave the session's sizing alone.
+
+    Structured Streaming fixes the number of state partitions at stream
+    start from ``spark.sql.shuffle.partitions``, and every micro-batch
+    opens and commits each of them, so on small local batches the cost of
+    a stateful trigger grows with the count. The rule:
+
+    - ``SPARK_GRAFT_STREAM_STATE_PARTITIONS``, when set, wins on any master;
+    - on a local master, ``min(8, spark.sql.shuffle.partitions)`` — never
+      wider than the session itself runs its shuffles. The cap of 8 is a
+      local measurement on a 32-core host (q_stream_stream_join, 14 s at
+      32 partitions, 4 s at 8); the session bound comes from a sweep on a
+      4-core host, where a 10-trigger dedup stream cost 4.75 / 3.11 / 1.42
+      CPU s at 8 / 4 / 2 state partitions;
+    - on any other master, ``None``: a cluster sizes state to stream
+      throughput through the env override, like any shuffle sizing call.
+    """
     env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     if env is not None:
         return env
     if spark.sparkContext.master.startswith("local"):
-        return "8"
+        return str(min(8, int(spark.conf.get("spark.sql.shuffle.partitions"))))
     return None
 
 

@@ -88,3 +88,16 @@ def test_weighted_exact_sum_matches_per_row_exact_sum(spark):
     assert got.keys() == want.keys()
     for k in want:
         assert struct.pack("d", got[k]) == struct.pack("d", want[k]), (k, got[k], want[k])
+
+
+def test_get_spark_pins_ansi(spark):
+    """weighted_exact_sum fails loud out of its domain only under ANSI, so
+    get_spark sets it rather than relying on the Spark default."""
+    from etl_pipeline_project_spark.session import get_spark
+
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        assert get_spark(shuffle_partitions=parts).conf.get("spark.sql.ansi.enabled") == "true"
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "true")

@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    _try_cast_bigint_sql,
     q_empty_relation,
     q_inline_dim_join,
     q_try_cast_matrix,
@@ -50,3 +51,23 @@ def test_try_cast_degradation_counts(spark, sf_dir):
     assert r["n_k_parsed"] == r["n"]
     assert r["n_type_parsed"] == 0
     assert r["n_date_parsed"] == r["n"]
+
+
+def test_try_cast_guard_equals_try_cast_on_adversarial_strings(spark):
+    """The exception-free guard must give exactly try_cast's answer,
+    including DEL (0x7F), which the cast trims like other controls."""
+    battery = [
+        "123", " 123 ", "+7", "-7", "", " ", "+", "-", "abc", "12a", "1 2",
+        "\t42\n", "\x0042\x1f", "123\x7f", "\x7f123", "\x7f-5\x7f", "\x7f",
+        "1\x7f2", "\x80123", "123\u00a0", "\u0661\u0662", "9223372036854775807",
+        "9223372036854775808", "-9223372036854775808", "00000000000000000001",
+        "1e3", "1.0", "0x10", None,
+    ]
+    df = spark.createDataFrame([(s,) for s in battery], "s string")
+    rows = df.select(
+        "s",
+        F.expr(_try_cast_bigint_sql("s")).alias("guard"),
+        F.expr("try_cast(s AS BIGINT)").alias("try_cast"),
+    ).collect()
+    assert [(r["s"], r["guard"]) for r in rows] == [(r["s"], r["try_cast"]) for r in rows]
+    assert {r["s"]: r["guard"] for r in rows}["123\x7f"] == 123

@@ -65,12 +65,16 @@ def test_daily_dag_end_to_end(spark, sf_dir, e2e_dirs):
         assert df.count() == df.select(key).distinct().count(), table
 
     # Mart build over the loaded operational store, full-refresh sinks.
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
     mart = build_mart(ops_loaded)
     for name, df in mart.items():
         write_overwrite(df, f"{BASE}/mart/{name}")
         back = spark.read.parquet(f"{BASE}/mart/{name}")
         assert back.count() > 0, name
         assert back.columns == [f.name for f in MART_SCHEMAS[name].fields], name
+    # the mart build caches nothing: no RDD is left persisted by it
+    assert set(persisted().keySet()) <= before
 
     # Idempotence of the whole daily run: replaying day 2 appends nothing.
     for table in src:

@@ -21,7 +21,7 @@ def test_build_mart_covers_all_eleven_tables(spark, sf_dir):
 
 def test_mart_column_names_match_ddl(spark, sf_dir):
     ops = derive_reference_tables(spark, sf_dir)
-    mart = build_mart(ops, cache_sources=False)
+    mart = build_mart(ops)
     for name, df in mart.items():
         expected = [f.name for f in MART_SCHEMAS[name].fields]
         assert df.columns == expected, (name, df.columns, expected)
@@ -30,7 +30,7 @@ def test_mart_column_names_match_ddl(spark, sf_dir):
 def test_fact_maps_carries_rating(spark, sf_dir):
     """SURVEY §1.4 Q2: rating must survive into fact_maps, NOT NULL."""
     ops = derive_reference_tables(spark, sf_dir)
-    fm = build_mart(ops, cache_sources=False)["fact_maps"]
+    fm = build_mart(ops)["fact_maps"]
     assert "rating" in fm.columns
     assert fm.filter(F.col("rating").isNull()).count() == 0
 
@@ -40,7 +40,7 @@ def test_fact_twitter_drops_dangling_fks(spark, sf_dir):
     the NOT-NULL filter removes them (`data/transformation_dw.py:266-284`).
     Tweets pointing at p_missing_* places must not reach the fact."""
     ops = derive_reference_tables(spark, sf_dir)
-    ft = build_mart(ops, cache_sources=False)["fact_twitter"]
+    ft = build_mart(ops)["fact_twitter"]
     assert ft.filter(F.col("nama_lokasi").isNull()).count() == 0
     dangling = ops["tweets"].filter(F.col("place_id_source").startswith("p_missing_"))
     kept_ids = ft.select("id_tweet")
@@ -49,7 +49,7 @@ def test_fact_twitter_drops_dangling_fks(spark, sf_dir):
 
 def test_dims_are_unique_on_key(spark, sf_dir):
     ops = derive_reference_tables(spark, sf_dir)
-    mart = build_mart(ops, cache_sources=False)
+    mart = build_mart(ops)
     keys = {
         "dim_place": "place_id",
         "dim_user": "id_user",
@@ -84,6 +84,6 @@ def test_ops_load_idempotent(spark, sf_dir):
 
 def test_fact_money_is_decimal(spark, sf_dir):
     ops = derive_reference_tables(spark, sf_dir)
-    mart = build_mart(ops, cache_sources=False)
+    mart = build_mart(ops)
     assert dict(mart["fact_pemasukan"].dtypes)["jumlah_pemasukan"] == "decimal(38,9)"
     assert dict(mart["fact_pengeluaran"].dtypes)["jumlah_pengeluaran"] == "decimal(38,9)"

@@ -6,6 +6,7 @@ across micro-batches)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -150,3 +151,27 @@ def test_merge_batch_first_write_wins(spark, tmp_path_factory, waves):
             merge_batch(spark.createDataFrame(sorted(wave.items()), schema), target, "k")
     again = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
     assert again == expect
+
+
+def test_merge_batch_appends_and_leaves_existing_parts_alone(spark, tmp_path):
+    """Each merge appends only unseen keys: the part files already in the
+    target keep their names and sizes, and a replayed batch adds no rows."""
+    schema = T.StructType(
+        [T.StructField("k", T.LongType(), False), T.StructField("v", T.LongType(), False)]
+    )
+    target = str(tmp_path / "t")
+
+    def parts():
+        return {f: os.path.getsize(os.path.join(target, f))
+                for f in os.listdir(target) if f.endswith(".parquet")}
+
+    merge_batch(spark.createDataFrame([(1, 10), (2, 20)], schema), target, "k")
+    first = parts()
+    second_batch = spark.createDataFrame([(2, 99), (3, 30)], schema)
+    merge_batch(second_batch, target, "k")
+    assert first.items() <= parts().items()
+    rows = sorted(tuple(r) for r in spark.read.parquet(target).collect())
+    assert rows == [(1, 10), (2, 20), (3, 30)]
+
+    merge_batch(second_batch, target, "k")
+    assert spark.read.parquet(target).count() == 3

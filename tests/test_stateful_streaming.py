@@ -41,17 +41,22 @@ def test_stream_session_counts_cover_all_events(spark, sf_dir):
 
 
 def test_stream_state_partitions_scoping(spark, monkeypatch):
-    """r13: the literal-8 state sizing is scoped to LOCAL masters; on a
-    cluster the default is None (leave the session's sizing alone — a
-    forgotten env var must never pin a 100 TB stream's state store to 8),
-    and the env override wins everywhere."""
+    """On a local master the state store is min(8, the session's shuffle
+    partitions) wide; other masters are left alone (None); the env
+    override wins everywhere."""
     from types import SimpleNamespace
 
     from etl_pipeline_project_spark.streaming.ops import stream_state_partitions
 
     monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
-    # local session (the test fixture) -> the measured micro-batch default
-    assert stream_state_partitions(spark) == "8"
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        assert stream_state_partitions(spark) == "4"
+        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        assert stream_state_partitions(spark) == "8"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # non-local master -> no override
     fake = SimpleNamespace(sparkContext=SimpleNamespace(master="spark://host:7077"))
     assert stream_state_partitions(fake) is None
