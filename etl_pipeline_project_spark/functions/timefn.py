@@ -49,10 +49,3 @@ def parse_timestamp(col: Column | str, fmt: str | None = None) -> Column:
     `manual_tools/manual_finance_uploader.py:58-61`)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.to_timestamp(c, fmt) if fmt else F.to_timestamp(c)
-
-
-def from_epoch_seconds(col: Column | str) -> Column:
-    """Epoch-seconds → UTC timestamp (`data/extraction.py:50`:
-    ``datetime.fromtimestamp(t, timezone.utc)``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.timestamp_seconds(c)

@@ -47,13 +47,6 @@ def anti_incremental(staged: DataFrame, existing: DataFrame, key: list[str] | st
     return staged.join(existing.select(*keys), keys, "left_anti")
 
 
-def semi_filter(df: DataFrame, other: DataFrame, key: list[str] | str) -> DataFrame:
-    """EXISTS-style filter (left_semi) — not reference-mandated, exposed for
-    completeness alongside the anti form."""
-    keys = [key] if isinstance(key, str) else list(key)
-    return df.join(other.select(*keys), keys, "left_semi")
-
-
 def salted_join(
     left: DataFrame,
     right: DataFrame,
@@ -140,8 +133,7 @@ def asof_join_grouped(
     key. State carried across Arrow batches is one scalar pair, so **peak
     executor memory is one Arrow batch (~10k rows) regardless of key skew**
     — a key holding 90% of all rows streams through like any other
-    (skew-tested in tests/test_batch2_ops.py). Contrast with the cogroup
-    form `asof_join_cogroup`, which materializes each key group whole.
+    (skew-tested in tests/test_batch2_ops.py).
 
     Equivalent to `asof_join` (and DuckDB ``ASOF JOIN``); when the right
     side has duplicate timestamps within a key, the largest value wins
@@ -226,63 +218,6 @@ def asof_join_grouped(
             yield rows
 
     return stream.mapInPandas(merge_stream, out_schema)
-
-
-def asof_join_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    right_value: str,
-    max_group_rows: int = 5_000_000,
-) -> DataFrame:
-    """As-of join via cogroup + ``pd.merge_asof`` — the cogroup-API form.
-
-    **Per-group memory bound**: each key group materializes whole in one
-    executor (Arrow-batched but concatenated), so a single mega-key OOMs
-    the task at extreme skew. ``max_group_rows`` guards this honestly: a
-    group exceeding it raises with a pointer to `asof_join_grouped`, the
-    streaming sort-merge form whose memory is one Arrow batch. Use this
-    form when groups are known-bounded and merge_asof extras (nearest,
-    tolerance) are wanted.
-    """
-    import pandas as pd
-
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in left.schema.fields)
-        + f", r_{right_value} {dict(right.dtypes)[right_value]}"
-    )
-    # Alias the right side to fresh attribute ids: when right derives from
-    # left (self-as-of), shared expression ids make the analyzer collapse
-    # the conflicting columns in the cogroup, silently dropping the right
-    # timestamp for left-heavy groups.
-    r2 = right.select(
-        F.col(key).alias("__rkey"),
-        F.col(right_ts).alias("__rts_in"),
-        F.col(right_value).alias("__rval_in"),
-    )
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(lpdf) + len(rpdf) > max_group_rows:
-            raise ValueError(
-                f"asof_join_cogroup: group of {len(lpdf) + len(rpdf)} rows exceeds "
-                f"max_group_rows={max_group_rows}; use asof_join_grouped (streaming "
-                "sort-merge, batch-bounded memory) for skewed keys"
-            )
-        lpdf = lpdf.sort_values(left_ts)
-        if rpdf.empty:
-            lpdf[f"r_{right_value}"] = None
-            return lpdf
-        rp = pd.DataFrame(
-            {"__rts": rpdf["__rts_in"].values, f"r_{right_value}": rpdf["__rval_in"].values}
-        ).sort_values("__rts")
-        return pd.merge_asof(
-            lpdf, rp, left_on=left_ts, right_on="__rts", direction="backward"
-        ).drop(columns=["__rts"])
-
-    return left.groupBy(key).cogroup(r2.groupBy("__rkey")).applyInPandas(merge, out_schema)
 
 
 def fuzzy_match(

@@ -1,4 +1,4 @@
-"""Stateless row/column operators: project, rename, NOT-NULL filter, predicate.
+"""Stateless row/column operators: project, rename, NOT-NULL filter.
 
 Reference behaviors re-expressed:
 
@@ -14,7 +14,7 @@ Reference behaviors re-expressed:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 
 def select_existing(df: DataFrame, columns: list[str]) -> DataFrame:
@@ -34,9 +34,3 @@ def rename_columns(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
 def drop_null_rows(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
     """NOT-NULL row filter enforcing the mart DDL procedurally."""
     return df.na.drop(subset=subset) if subset else df.na.drop()
-
-
-def filter_rows(df: DataFrame, predicate: Column) -> DataFrame:
-    """Row predicate (`data/extraction.py:43` field-presence guard and
-    friends). Thin alias so pipelines read uniformly."""
-    return df.filter(predicate)

@@ -1,13 +1,10 @@
-"""Window functions: ranked top-k per group, sort+limit.
+"""Window functions: ranked top-k per group, sessions, order statistics.
 
 Generalizes the reference's deterministic keep-one-per-key dedup
 (SURVEY §1.4 Q3 / §2.G): ``row_number`` over an explicit ordering is the
 same machinery with k=1. Top-k per group shuffles once on the group key;
 within-partition sort is bounded by group size (skewed groups fall to
 AQE's skew splitting).
-
-``ORDER BY + LIMIT`` plans as TakeOrderedAndProject — per-partition top-N
-then a driver-side merge of N×partitions rows, never a full global sort.
 """
 
 from __future__ import annotations
@@ -28,13 +25,6 @@ def topk_per_group(
     order_cols = [F.col(c) if isinstance(c, str) else c for c in order]
     w = Window.partitionBy(*groups).orderBy(*order_cols)
     return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
-
-
-def sort_limit(df: DataFrame, order: list[Column | str], n: int) -> DataFrame:
-    """Global ORDER BY + LIMIT. Ordering must include a unique tie-break
-    column for deterministic results (same rule as dedup Q3)."""
-    order_cols = [F.col(c) if isinstance(c, str) else c for c in order]
-    return df.orderBy(*order_cols).limit(n)
 
 
 def sessionize(

@@ -32,13 +32,3 @@ def ensure_table(
     spark.sql(
         f"CREATE TABLE IF NOT EXISTS `{name}` ({_ddl_columns(schema)}) USING {fmt}{loc}"
     )
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver-testdata table as a temp view so SQL entry
-    points (`spark.sql`) see the same catalog the DuckDB oracle does."""
-    from etl_pipeline_project_spark.schemas import TESTDATA_TABLES
-    from etl_pipeline_project_spark.sources.readers import load_table
-
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

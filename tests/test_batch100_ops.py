@@ -9,9 +9,9 @@ import math
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_kmv_set_ops,
     q_shapley_attribution,
-    q_two_proportion_ztest,
     q_uplift_deciles,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
@@ -118,7 +118,7 @@ def test_uplift_deciles_partition_users(spark, sf_dir):
 
 
 def test_two_proportion_ztest_formula(spark, sf_dir):
-    r = q_two_proportion_ztest(spark, sf_dir).first()
+    r = REGISTRY["q_two_proportion_ztest"](spark, sf_dir).first()
     assert r["n1"] + r["n0"] > 0
     assert 0 < r["p1"] < 1 and 0 < r["p0"] < 1  # non-degenerate outcome
     pp = (r["x1"] + r["x0"]) / (r["n1"] + r["n0"])

@@ -6,9 +6,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_knn_graph_blocked,
     q_knn_recall_eval,
-    q_scd3_dim,
     q_stream_window_append,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
@@ -35,7 +35,7 @@ def test_stream_window_append_equals_batch_and_is_final(spark, sf_dir):
 
 
 def test_scd3_current_and_previous(spark, sf_dir):
-    rows = q_scd3_dim(spark, sf_dir).collect()
+    rows = REGISTRY["q_scd3_dim"](spark, sf_dir).collect()
     orders = load_table(spark, sf_dir, "orders").collect()
     by_cust = {}
     for o in orders:

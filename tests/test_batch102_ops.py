@@ -6,16 +6,16 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_bootstrap_diff_ci,
     q_delete_vectors_apply,
-    q_incr_join_maintenance,
     q_watermark_sweep,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_incr_join_delta_rule_closes(spark, sf_dir):
-    rows = {r["via"]: r for r in q_incr_join_maintenance(spark, sf_dir).collect()}
+    rows = {r["via"]: r for r in REGISTRY["q_incr_join_maintenance"](spark, sf_dir).collect()}
     assert set(rows) <= {"delta_o", "delta_l", "delta_both"}
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")

@@ -9,10 +9,9 @@ import math
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_arc_elasticity,
+    REGISTRY,
     q_occ_conflicts,
     q_offline_policy_eval,
-    q_sla_burn_rate,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
@@ -57,7 +56,7 @@ def test_occ_conflicts_are_intersection(spark, sf_dir):
 
 
 def test_arc_elasticity_symmetry(spark, sf_dir):
-    rows = q_arc_elasticity(spark, sf_dir).collect()
+    rows = REGISTRY["q_arc_elasticity"](spark, sf_dir).collect()
     for r in rows:
         assert r["q1"] > 0 and r["q2"] > 0
         # recompute from the emitted cells (midpoint formula)
@@ -67,7 +66,7 @@ def test_arc_elasticity_symmetry(spark, sf_dir):
 
 
 def test_sla_burn_rate_windows(spark, sf_dir):
-    rows = q_sla_burn_rate(spark, sf_dir).collect()
+    rows = REGISTRY["q_sla_burn_rate"](spark, sf_dir).collect()
     ev = load_table(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts")).first()[0]
     import datetime

@@ -8,16 +8,15 @@ import re
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_allen_relations,
+    REGISTRY,
     q_cents_digit_bias,
     q_rank_biased_overlap,
-    q_relational_division,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_relational_division_all_priorities(spark, sf_dir):
-    rows = q_relational_division(spark, sf_dir).collect()
+    rows = REGISTRY["q_relational_division"](spark, sf_dir).collect()
     orders = load_table(spark, sf_dir, "orders")
     need = {
         r["o_orderpriority"]
@@ -33,7 +32,7 @@ def test_relational_division_all_priorities(spark, sf_dir):
 
 
 def test_allen_relations_exhaustive_and_exclusive(spark, sf_dir):
-    rows = q_allen_relations(spark, sf_dir).collect()
+    rows = REGISTRY["q_allen_relations"](spark, sf_dir).collect()
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )

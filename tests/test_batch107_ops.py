@@ -8,10 +8,8 @@ import math
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_beta_posterior,
-    q_eb_shrinkage,
+    REGISTRY,
     q_interim_analysis,
-    q_pairwise_bonferroni,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
@@ -41,7 +39,7 @@ def test_interim_analysis_cuts_nest(spark, sf_dir):
 
 
 def test_beta_posterior_rationals(spark, sf_dir):
-    rows = q_beta_posterior(spark, sf_dir).collect()
+    rows = REGISTRY["q_beta_posterior"](spark, sf_dir).collect()
     for r in rows:
         assert r["alpha"] == 1 + r["x"]
         assert r["beta"] == 1 + r["n"] - r["x"]
@@ -54,7 +52,7 @@ def test_beta_posterior_rationals(spark, sf_dir):
 
 
 def test_eb_shrinkage_pulls_toward_global(spark, sf_dir):
-    rows = q_eb_shrinkage(spark, sf_dir).collect()
+    rows = REGISTRY["q_eb_shrinkage"](spark, sf_dir).collect()
     g = rows[0]["global_rate"]
     assert all(abs(r["global_rate"] - g) < 1e-15 for r in rows)
     for r in rows:
@@ -75,7 +73,7 @@ def test_eb_shrinkage_pulls_toward_global(spark, sf_dir):
 
 
 def test_pairwise_bonferroni_cover_and_antisymmetry(spark, sf_dir):
-    rows = q_pairwise_bonferroni(spark, sf_dir).collect()
+    rows = REGISTRY["q_pairwise_bonferroni"](spark, sf_dir).collect()
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     n_types = ev.select("event_type").distinct().count()
     assert len(rows) == n_types * (n_types - 1) // 2

@@ -8,9 +8,8 @@ import math
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_benjamini_hochberg,
+    REGISTRY,
     q_page_hinkley,
-    q_simpson_detect,
     q_storage_tiering,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
@@ -22,7 +21,7 @@ BH_CRIT = [2.8070337683438114, 2.5758293035489, 2.432379058584449,
 
 
 def test_bh_stepup_and_dominates_bonferroni(spark, sf_dir):
-    rows = sorted(q_benjamini_hochberg(spark, sf_dir).collect(), key=lambda r: r["bh_rank"])
+    rows = sorted(REGISTRY["q_benjamini_hochberg"](spark, sf_dir).collect(), key=lambda r: r["bh_rank"])
     assert [r["bh_rank"] for r in rows] == list(range(1, 11))
     zs = [abs(r["z"]) for r in rows]
     assert zs == sorted(zs, reverse=True)
@@ -65,7 +64,7 @@ def test_page_hinkley_fold_recompute(spark, sf_dir):
 
 
 def test_simpson_signs_are_integer_cross_products(spark, sf_dir):
-    rows = q_simpson_detect(spark, sf_dir).collect()
+    rows = REGISTRY["q_simpson_detect"](spark, sf_dir).collect()
     pooled = {(r["pooled_sign_num"]) for r in rows}
     assert len(pooled) == 1  # one pooled sign broadcast to every stratum
     pn_t = sum(r["n_t"] for r in rows)

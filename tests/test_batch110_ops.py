@@ -8,8 +8,8 @@ import math
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_abc_xyz,
-    q_complementary_suppression,
     q_haberman_residuals,
     q_newsvendor,
 )
@@ -35,7 +35,7 @@ def test_haberman_residuals_formula_and_mass(spark, sf_dir):
 
 
 def test_complementary_suppression_no_single_leak(spark, sf_dir):
-    rows = q_complementary_suppression(spark, sf_dir).collect()
+    rows = REGISTRY["q_complementary_suppression"](spark, sf_dir).collect()
     by_type = {}
     for r in rows:
         by_type.setdefault(r["event_type"], []).append(r)

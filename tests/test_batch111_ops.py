@@ -8,10 +8,10 @@ import math
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_inspection_paradox,
     q_mann_kendall,
     q_palma_ratio,
-    q_wilson_interval,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
@@ -29,7 +29,7 @@ def test_inspection_paradox_ratio_is_one_plus_cv2(spark, sf_dir):
 
 
 def test_wilson_interval_properties(spark, sf_dir):
-    rows = q_wilson_interval(spark, sf_dir).collect()
+    rows = REGISTRY["q_wilson_interval"](spark, sf_dir).collect()
     for r in rows:
         # 1-ULP float overshoot is possible at the p=0/1 boundaries
         eps = 1e-12

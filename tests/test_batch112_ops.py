@@ -8,7 +8,7 @@ import math
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_brier_score,
+    REGISTRY,
     q_expected_calibration_error,
     q_qini_curve,
     q_risk_coverage,
@@ -17,7 +17,7 @@ from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_brier_recompute_and_floor(spark, sf_dir):
-    r = q_brier_score(spark, sf_dir).first()
+    r = REGISTRY["q_brier_score"](spark, sf_dir).first()
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     rows = ev.select("value", "event_type").collect()
     sq = 0

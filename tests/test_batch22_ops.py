@@ -8,21 +8,16 @@ import hashlib
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_hash_split,
-    q_k_anonymize,
-    q_market_basket,
-    q_moments_skew_kurt,
     q_scan_json_roundtrip,
-    q_sql_q1,
-    q_sql_q3,
-    q_sql_q18,
 )
 
 
 def test_q1_sums_are_consistent(spark, sf_dir):
     """avg_qty must equal sum_qty / count_order exactly (it is computed
     that way — a final division of exact sums, not a running mean)."""
-    rows = q_sql_q1(spark, sf_dir).collect()
+    rows = REGISTRY["q_sql_q1"](spark, sf_dir).collect()
     assert len(rows) > 0
     for r in rows:
         assert r["avg_qty"] == r["sum_qty"] / r["count_order"]
@@ -30,20 +25,20 @@ def test_q1_sums_are_consistent(spark, sf_dir):
 
 
 def test_q3_topk_is_sorted_and_bounded(spark, sf_dir):
-    rows = q_sql_q3(spark, sf_dir).collect()
+    rows = REGISTRY["q_sql_q3"](spark, sf_dir).collect()
     assert 0 < len(rows) <= 10
     revs = [r["revenue"] for r in rows]
     assert revs == sorted(revs, reverse=True)
 
 
 def test_q18_threshold_holds(spark, sf_dir):
-    rows = q_sql_q18(spark, sf_dir).collect()
+    rows = REGISTRY["q_sql_q18"](spark, sf_dir).collect()
     assert len(rows) > 0
     assert all(r["sum_qty"] > 250 for r in rows)
 
 
 def test_market_basket_pairs_ordered_with_support(spark, sf_dir):
-    rows = q_market_basket(spark, sf_dir).collect()
+    rows = REGISTRY["q_market_basket"](spark, sf_dir).collect()
     assert len(rows) > 0
     assert all(r["p1"] < r["p2"] and r["n_orders"] >= 2 for r in rows)
 
@@ -55,7 +50,7 @@ def test_moments_match_numpy_exact(spark, sf_dir):
 
     from etl_pipeline_project_spark.sources.readers import load_table
 
-    out = {r["l_returnflag"]: r for r in q_moments_skew_kurt(spark, sf_dir).collect()}
+    out = {r["l_returnflag"]: r for r in REGISTRY["q_moments_skew_kurt"](spark, sf_dir).collect()}
     pdf = (
         load_table(spark, sf_dir, "lineitem")
         .select("l_returnflag", "l_quantity")
@@ -74,7 +69,7 @@ def test_k_anonymize_conserves_rows(spark, sf_dir):
     from etl_pipeline_project_spark.sources.readers import load_table
 
     total = load_table(spark, sf_dir, "customer").count()
-    agg = q_k_anonymize(spark, sf_dir).agg(
+    agg = REGISTRY["q_k_anonymize"](spark, sf_dir).agg(
         F.sum(F.col("released_rows") + F.col("suppressed_rows")).alias("t")
     ).first()
     assert agg["t"] == total

@@ -6,13 +6,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_pagerank_nations,
-    q_robust_scaler,
-    q_sql_q7,
     q_sql_q10,
     q_udf_arrow_batch,
-    q_window_first_last,
 )
+
+q_sql_q7 = REGISTRY["q_sql_q7"]
 
 
 def test_pagerank_mass_and_determinism(spark, sf_dir):
@@ -26,6 +26,32 @@ def test_pagerank_mass_and_determinism(spark, sf_dir):
     # mass leaks only through fixed-point truncation; stays near 1
     assert 0.9 < total <= 1.0000001
     assert all(p >= 0.15 / 25 - 1e-9 for _, p in a)
+
+
+def test_pagerank_matches_twin_on_dangling_nation_keys(spark, sf_dir, tmp_path):
+    """A customer and a supplier whose nation key is missing from
+    ``nation``: the Python-side loop returns what the recursive-CTE twin
+    returns (the dangling key is ranked once an edge reaches it)."""
+    import duckdb
+
+    from etl_pipeline_project_spark.queries import ORACLE
+
+    con = duckdb.connect()
+    gone = con.execute(
+        f"SELECT min(s_nationkey) FROM '{sf_dir}/supplier.parquet' "
+        f"WHERE s_nationkey IN (SELECT c_nationkey FROM '{sf_dir}/customer.parquet')"
+    ).fetchone()[0]
+    for t in ["lineitem", "orders", "customer", "supplier", "nation"]:
+        keep = f"WHERE n_nationkey <> {gone}" if t == "nation" else ""
+        con.execute(
+            f"COPY (SELECT * FROM '{sf_dir}/{t}.parquet' {keep}) "
+            f"TO '{tmp_path}/{t}.parquet' (FORMAT PARQUET)"
+        )
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path}/{t}.parquet'")
+    want = sorted(con.execute(ORACLE["q_pagerank_nations"]).fetchall())
+    got = sorted(tuple(r) for r in q_pagerank_nations(spark, str(tmp_path)).collect())
+    assert gone in {k for k, _ in want}
+    assert got == want
 
 
 def test_q7_both_directions_present(spark):
@@ -58,7 +84,7 @@ def test_arrow_udf_matches_jvm_length(spark, sf_dir):
 
 def test_robust_scaler_median_maps_to_zero(spark, sf_dir):
     """A row whose value equals its group median must scale to exactly 0."""
-    out = q_robust_scaler(spark, sf_dir)
+    out = REGISTRY["q_robust_scaler"](spark, sf_dir)
     from etl_pipeline_project_spark.sources.readers import load_table
 
     ev = load_table(spark, sf_dir, "events")

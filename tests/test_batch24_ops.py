@@ -6,17 +6,17 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_ab_welch_ttest,
+    REGISTRY,
     q_golden_record,
     q_graph_triangles,
-    q_sql_q4_exists,
-    q_sql_q14,
     q_zorder_cluster,
 )
 
+q_ab_welch_ttest = REGISTRY["q_ab_welch_ttest"]
+
 
 def test_q14_share_bounded(spark, sf_dir):
-    r = q_sql_q14(spark, sf_dir).first()
+    r = REGISTRY["q_sql_q14"](spark, sf_dir).first()
     assert 0.0 <= r["promo_share_pct"] <= 100.0
     assert r["promo_rev"] <= r["total_rev"]
 
@@ -26,7 +26,7 @@ def test_q4_exists_counts_orders_once(spark, sf_dir):
     qualify — total equals the distinct qualifying-order count."""
     from etl_pipeline_project_spark.sources.readers import load_table
 
-    total = sum(r["order_count"] for r in q_sql_q4_exists(spark, sf_dir).collect())
+    total = sum(r["order_count"] for r in REGISTRY["q_sql_q4_exists"](spark, sf_dir).collect())
     orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))

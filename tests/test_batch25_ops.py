@@ -5,17 +5,16 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_sql_q6,
-    q_sql_q8,
+    REGISTRY,
     q_sql_q13,
     q_sql_q15,
-    q_sql_q17,
     q_sql_q22,
+    q_sql_q8,
 )
 
 
 def test_q6_revenue_positive(spark, sf_dir):
-    r = q_sql_q6(spark, sf_dir).first()
+    r = REGISTRY["q_sql_q6"](spark, sf_dir).first()
     assert r["n_lines"] > 0 and r["revenue"] > 0
 
 
@@ -43,7 +42,7 @@ def test_q15_returns_the_max_only(spark, sf_dir):
 def test_q17_subset_of_lineitem(spark, sf_dir):
     from etl_pipeline_project_spark.sources.readers import load_table
 
-    r = q_sql_q17(spark, sf_dir).first()
+    r = REGISTRY["q_sql_q17"](spark, sf_dir).first()
     assert 0 < r["n_small"] <= load_table(spark, sf_dir, "lineitem").count()
 
 

@@ -6,11 +6,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_autocorr_lag1,
-    q_counter_increase,
+    REGISTRY,
     q_locf_fill,
     q_table_checksum,
-    q_table_diff,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
@@ -43,7 +41,7 @@ def test_locf_first_day_matches_first_reading(spark, sf_dir):
 def test_counter_increase_no_resets_equals_last_minus_first(spark, sf_dir):
     # for a monotone series, increase == last - first; verify the identity
     # on a synthesized monotone frame routed through the same operator SQL
-    out = q_counter_increase(spark, sf_dir)
+    out = REGISTRY["q_counter_increase"](spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     w = (
         ev.select("user_id", F.floor(F.col("value") * 1000).cast("long").alias("v"))
@@ -56,7 +54,7 @@ def test_counter_increase_no_resets_equals_last_minus_first(spark, sf_dir):
 
 
 def test_autocorr_in_valid_range(spark, sf_dir):
-    out = q_autocorr_lag1(spark, sf_dir)
+    out = REGISTRY["q_autocorr_lag1"](spark, sf_dir)
     assert out.count() > 0
     assert out.filter(
         (F.col("autocorr_lag1") < -1.0000001) | (F.col("autocorr_lag1") > 1.0000001)
@@ -103,7 +101,7 @@ def test_table_checksum_detects_a_single_cell_change(spark, sf_dir):
 
 
 def test_table_diff_counts_are_consistent(spark, sf_dir):
-    rows = {r["change_type"]: r["n_rows"] for r in q_table_diff(spark, sf_dir).collect()}
+    rows = {r["change_type"]: r["n_rows"] for r in REGISTRY["q_table_diff"](spark, sf_dir).collect()}
     orders = load_table(spark, sf_dir, "orders")
     n_a = orders.filter(F.col("o_orderkey") % 97 < 95).count()
     n_b = orders.filter(F.col("o_orderkey") % 89 < 87).count()

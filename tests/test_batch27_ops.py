@@ -6,10 +6,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_domain_mix_sample,
     q_embed_quantize_int8,
     q_feature_hash,
-    q_numeric_histogram,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
@@ -50,7 +50,7 @@ def test_domain_mix_rates_hold_approximately(spark, sf_dir):
 
 
 def test_histogram_mass_conserved(spark, sf_dir):
-    out = q_numeric_histogram(spark, sf_dir)
+    out = REGISTRY["q_numeric_histogram"](spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     assert out.agg(F.sum("n").alias("n")).first()["n"] == li.count()
     # bin bounds honored: min/max cents within [bin_lo*100, (bin_lo+5000)*100)

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_bollinger_bands,
+    REGISTRY,
     q_eval_metrics,
     q_ndcg_bm25,
 )
@@ -13,7 +13,7 @@ from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_bollinger_only_full_windows(spark, sf_dir):
-    out = q_bollinger_bands(spark, sf_dir)
+    out = REGISTRY["q_bollinger_bands"](spark, sf_dir)
     assert out.filter(F.col("n") != 20).count() == 0
     # breaches are rare by construction (2-sigma): under a third of rows
     total = out.count()
@@ -22,7 +22,7 @@ def test_bollinger_only_full_windows(spark, sf_dir):
 
 
 def test_bollinger_row_count_matches_window_arithmetic(spark, sf_dir):
-    out = q_bollinger_bands(spark, sf_dir)
+    out = REGISTRY["q_bollinger_bands"](spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     expected = per_user.select(

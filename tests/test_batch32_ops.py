@@ -4,12 +4,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_project_spark.queries import q_dq_uniqueness, q_partition_migration
+from etl_pipeline_project_spark.queries import (
+    REGISTRY,
+    q_partition_migration,
+)
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_uniqueness_covers_all_tables(spark, sf_dir):
-    rows = {r["table_name"]: r for r in q_dq_uniqueness(spark, sf_dir).collect()}
+    rows = {r["table_name"]: r for r in REGISTRY["q_dq_uniqueness"](spark, sf_dir).collect()}
     assert len(rows) == 10
     # the audit's reason to exist: it catches the one genuine PK violation
     # in the testdata — (l_orderkey, l_linenumber) is NOT unique

@@ -5,10 +5,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_attribution_last_touch,
     q_mann_whitney_u,
     q_spearman_rho,
-    q_streak_longest,
     q_tree_reachability,
     q_weighted_median,
 )
@@ -28,7 +28,7 @@ def test_attribution_conserves_purchases(spark, sf_dir):
 
 
 def test_streaks_invariants(spark, sf_dir):
-    out = q_streak_longest(spark, sf_dir).collect()
+    out = REGISTRY["q_streak_longest"](spark, sf_dir).collect()
     assert len(out) > 0
     for r in out:
         assert 1 <= r["longest_streak"] <= r["n_active_days"]

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_inventory_fifo,
+    REGISTRY,
     q_sax_symbolize,
     q_time_to_convert,
 )
@@ -48,7 +48,7 @@ def test_time_to_convert_invariants(spark, sf_dir):
 
 def test_fifo_full_allocation(spark, sf_dir):
     # demand == supply (same rows), so every unit is allocated exactly once
-    out = q_inventory_fifo(spark, sf_dir)
+    out = REGISTRY["q_inventory_fifo"](spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     total_qty = li.agg(F.sum(F.col("l_quantity").cast("long"))).first()[0]
     assert out.agg(F.sum("allocated_qty")).first()[0] == total_qty

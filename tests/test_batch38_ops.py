@@ -6,11 +6,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_hint_suite,
-    q_lateral_topk,
     q_observe_metrics,
-    q_scalar_subquery_corr,
-    q_try_arith,
     q_variant_json,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
@@ -31,7 +29,7 @@ def test_variant_json_matches_string_path(spark, sf_dir):
 
 
 def test_lateral_topk_equals_window_topk(spark, sf_dir):
-    out = q_lateral_topk(spark, sf_dir)
+    out = REGISTRY["q_lateral_topk"](spark, sf_dir)
     from pyspark.sql import Window
 
     cust = load_table(spark, sf_dir, "customer")
@@ -49,7 +47,7 @@ def test_lateral_topk_equals_window_topk(spark, sf_dir):
 
 
 def test_scalar_subquery_bounds(spark, sf_dir):
-    out = q_scalar_subquery_corr(spark, sf_dir)
+    out = REGISTRY["q_scalar_subquery_corr"](spark, sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     per_cust = {
         r["o_custkey"]: r["n"]
@@ -64,7 +62,7 @@ def test_try_arith_null_accounting(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     div_nulls = ev.filter(F.col("user_id") % 3 == 0).count()
     overflow = ev.filter(F.col("event_id") >= 2).count()
-    out = q_try_arith(spark, sf_dir)
+    out = REGISTRY["q_try_arith"](spark, sf_dir)
     agg = out.agg(
         F.sum("n_div_null").alias("d"), F.sum("n_overflow").alias("o")
     ).first()

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_emd_tcloseness,
+    REGISTRY,
     q_iso_week_rollup,
     q_retention_sweep,
     q_tz_convert,
@@ -32,7 +32,7 @@ def test_iso_week_year_boundary(spark, sf_dir):
 
 
 def test_emd_bounds_and_zero_for_global(spark, sf_dir):
-    for r in q_emd_tcloseness(spark, sf_dir).collect():
+    for r in REGISTRY["q_emd_tcloseness"](spark, sf_dir).collect():
         # EMD normalized by denom is within [0, n_buckets]
         assert 0 <= r["emd_num"]
         assert r["emd_denom"] > 0

@@ -7,8 +7,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_alloc_largest_remainder,
-    q_assoc_confidence,
     q_benford_digits,
     q_dup_ngram_coverage,
     q_partition_bounds,
@@ -49,7 +49,7 @@ def test_rfm_quintiles_partition_customers(spark, sf_dir):
 
 
 def test_assoc_confidence_and_lift_bounds(spark, sf_dir):
-    for r in q_assoc_confidence(spark, sf_dir).collect():
+    for r in REGISTRY["q_assoc_confidence"](spark, sf_dir).collect():
         assert r["part_a"] < r["part_b"]
         assert r["s_ab"] >= 3
         assert r["s_ab"] <= min(r["s_a"], r["s_b"])

@@ -6,9 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_kmv_distinct,
-    q_l_diversity,
-    q_ltv_cohort_curve,
     q_scan_text_roundtrip,
     q_union_by_name,
 )
@@ -47,7 +46,7 @@ def test_union_by_name_null_fill(spark, sf_dir):
 
 
 def test_l_diversity_bounds(spark, sf_dir):
-    out = q_l_diversity(spark, sf_dir).collect()
+    out = REGISTRY["q_l_diversity"](spark, sf_dir).collect()
     # priority domain has 5 values; l_distinct within [1, 5]
     for r in out:
         assert 1 <= r["l_distinct"] <= 5
@@ -75,7 +74,7 @@ def test_text_roundtrip_matches_source(spark, sf_dir):
 
 
 def test_ltv_curve_monotone_per_cohort(spark, sf_dir):
-    rows = q_ltv_cohort_curve(spark, sf_dir).collect()
+    rows = REGISTRY["q_ltv_cohort_curve"](spark, sf_dir).collect()
     by_cohort: dict[int, list] = {}
     for r in rows:
         by_cohort.setdefault(r["cohort_m"], []).append(r)

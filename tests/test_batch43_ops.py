@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_log2_histogram,
+    REGISTRY,
     q_scan_csv_permissive,
     q_seasonal_residual,
     q_stream_complete_agg,
@@ -26,7 +26,7 @@ def test_string_agg_is_sorted_and_deterministic(spark, sf_dir):
 
 
 def test_log2_histogram_bucket_ranges(spark, sf_dir):
-    rows = q_log2_histogram(spark, sf_dir).collect()
+    rows = REGISTRY["q_log2_histogram"](spark, sf_dir).collect()
     n_orders = load_table(spark, sf_dir, "orders").count()
     assert sum(r["n"] for r in rows) == n_orders
     for r in rows:

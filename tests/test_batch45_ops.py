@@ -6,8 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_group_by_all,
-    q_merge_all_clauses,
+    REGISTRY,
     q_scan_python_datasource,
     q_sql_pipe,
 )
@@ -50,7 +49,7 @@ def test_sql_pipe_equals_nested_sql(spark, sf_dir):
 
 
 def test_group_by_all_keys(spark, sf_dir):
-    out = q_group_by_all(spark, sf_dir)
+    out = REGISTRY["q_group_by_all"](spark, sf_dir)
     assert out.groupBy("o_orderpriority", "o_orderstatus", "yr").count().filter(
         F.col("count") > 1
     ).count() == 0
@@ -59,7 +58,7 @@ def test_group_by_all_keys(spark, sf_dir):
 
 
 def test_merge_matrix_all_clauses_fire(spark, sf_dir):
-    rows = {r["action"]: r for r in q_merge_all_clauses(spark, sf_dir).collect()}
+    rows = {r["action"]: r for r in REGISTRY["q_merge_all_clauses"](spark, sf_dir).collect()}
     assert set(rows) == {"update", "delete_matched", "insert", "delete_by_source"}
     # deletes carry no surviving value
     assert rows["delete_matched"]["sum_new_cents"] is None

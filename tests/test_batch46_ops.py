@@ -5,16 +5,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_array_set_ops,
-    q_fd_audit,
     q_id_gap_ranges,
-    q_null_ordering,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_fd_audit_verdicts(spark, sf_dir):
-    rows = {r["fd"]: r for r in q_fd_audit(spark, sf_dir).collect()}
+    rows = {r["fd"]: r for r in REGISTRY["q_fd_audit"](spark, sf_dir).collect()}
     # key FDs hold; the non-key candidate fails
     assert rows["o_orderkey->o_custkey"]["holds"]
     assert rows["c_custkey->c_nationkey"]["holds"]
@@ -23,7 +22,7 @@ def test_fd_audit_verdicts(spark, sf_dir):
 
 
 def test_null_ordering_divergence(spark, sf_dir):
-    r = q_null_ordering(spark, sf_dir).first()
+    r = REGISTRY["q_null_ordering"](spark, sf_dir).first()
     assert r["n_nulls"] > 0
     # with nulls present, the two placements pick different first rows
     assert r["first_nulls_first"] != r["first_nulls_last"]

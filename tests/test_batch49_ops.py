@@ -6,11 +6,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_dedup_normalized,
-    q_history_compress,
-    q_peak_detect,
     q_session_paths,
-    q_vwap,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
@@ -35,7 +33,7 @@ def test_session_paths_cover_users(spark, sf_dir):
 
 
 def test_peak_detect_labels(spark, sf_dir):
-    rows = sorted(q_peak_detect(spark, sf_dir).collect(), key=lambda r: r["day"])
+    rows = sorted(REGISTRY["q_peak_detect"](spark, sf_dir).collect(), key=lambda r: r["day"])
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     n_days = ev.select(F.col("ts").cast("date")).distinct().count()
     # boundary days are excluded
@@ -47,7 +45,7 @@ def test_peak_detect_labels(spark, sf_dir):
 
 
 def test_vwap_bounds(spark, sf_dir):
-    rows = q_vwap(spark, sf_dir).collect()
+    rows = REGISTRY["q_vwap"](spark, sf_dir).collect()
     li = load_table(spark, sf_dir, "lineitem")
     bounds = li.agg(
         F.min("l_extendedprice").alias("lo"), F.max("l_extendedprice").alias("hi")
@@ -58,7 +56,7 @@ def test_vwap_bounds(spark, sf_dir):
 
 
 def test_history_compress_invariants(spark, sf_dir):
-    rows = q_history_compress(spark, sf_dir).collect()
+    rows = REGISTRY["q_history_compress"](spark, sf_dir).collect()
     ev = load_table(spark, sf_dir, "events")
     per_user = {
         r["user_id"]: r["n"]

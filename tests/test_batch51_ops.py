@@ -6,17 +6,17 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_attribution_linear,
     q_feature_assembly,
     q_seasonality_index,
-    q_set_intersect_all,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_intersect_all_min_multiplicity(spark, sf_dir):
     out = (
-        q_set_intersect_all(spark, sf_dir)
+        REGISTRY["q_set_intersect_all"](spark, sf_dir)
         .groupBy("nationkey")
         .count()
         .collect()

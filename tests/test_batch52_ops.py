@@ -6,16 +6,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_daily_percentile_bands,
+    REGISTRY,
     q_inverted_index_stats,
     q_langid_eval,
-    q_pattern_match_triple,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_pattern_matches_ground_truth(spark, sf_dir):
-    out = {r["user_id"]: r["n_matches"] for r in q_pattern_match_triple(spark, sf_dir).collect()}
+    out = {r["user_id"]: r["n_matches"] for r in REGISTRY["q_pattern_match_triple"](spark, sf_dir).collect()}
     ev = load_table(spark, sf_dir, "events")
     rows = ev.select("user_id", "ts", "event_id", "event_type").collect()
     by_user: dict[int, list] = {}
@@ -48,7 +47,7 @@ def test_inverted_index_consistency(spark, sf_dir):
 
 
 def test_daily_bands_order(spark, sf_dir):
-    rows = q_daily_percentile_bands(spark, sf_dir).collect()
+    rows = REGISTRY["q_daily_percentile_bands"](spark, sf_dir).collect()
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     assert len(rows) == ev.select(F.col("ts").cast("date")).distinct().count()
     for r in rows:

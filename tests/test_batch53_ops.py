@@ -7,8 +7,8 @@ import re
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_agg_bucketed,
-    q_agg_salted_skew,
     q_join_dpp,
     q_stream_checkpoint_resume,
 )
@@ -30,7 +30,7 @@ def test_bucketed_agg_zero_exchange_before_keyed_agg(spark, sf_dir):
 
 
 def test_salted_agg_equals_direct(spark, sf_dir):
-    out = {r["event_type"]: r for r in q_agg_salted_skew(spark, sf_dir).collect()}
+    out = {r["event_type"]: r for r in REGISTRY["q_agg_salted_skew"](spark, sf_dir).collect()}
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     direct = {
         r["event_type"]: r

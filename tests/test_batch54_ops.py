@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_dead_letter_route,
+    REGISTRY,
     q_incremental_watermark,
     q_lambda_map_suite,
     q_udf_sql_registered,
@@ -48,7 +48,7 @@ def test_watermark_incremental_exactly_once(spark, sf_dir):
 
 
 def test_dead_letter_partition_of_input(spark, sf_dir):
-    rows = {r["route"]: r["n_rows"] for r in q_dead_letter_route(spark, sf_dir).collect()}
+    rows = {r["route"]: r["n_rows"] for r in REGISTRY["q_dead_letter_route"](spark, sf_dir).collect()}
     ev = load_table(spark, sf_dir, "events")
     assert sum(rows.values()) == ev.count()
     for route in rows:

@@ -6,10 +6,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_per_user_cap,
-    q_profile_drift,
     q_session_bounce,
-    q_target_encode_loo,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
@@ -26,7 +25,7 @@ def test_per_user_cap_accounting(spark, sf_dir):
 
 
 def test_loo_excludes_own_label(spark, sf_dir):
-    rows = q_target_encode_loo(spark, sf_dir).limit(200).collect()
+    rows = REGISTRY["q_target_encode_loo"](spark, sf_dir).limit(200).collect()
     for r in rows:
         assert 0 <= r["loo_num"] <= r["loo_den"]
         assert r["loo_encoding"] == r["loo_num"] / r["loo_den"]
@@ -40,7 +39,7 @@ def test_loo_excludes_own_label(spark, sf_dir):
 
 
 def test_profile_drift_halves_partition(spark, sf_dir):
-    rows = {r["half"]: r for r in q_profile_drift(spark, sf_dir).collect()}
+    rows = {r["half"]: r for r in REGISTRY["q_profile_drift"](spark, sf_dir).collect()}
     ev = load_table(spark, sf_dir, "events")
     assert rows["h1"]["n_rows"] + rows["h2"]["n_rows"] == ev.count()
     for r in rows.values():

@@ -6,15 +6,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_dynamic_partition_overwrite,
     q_fiscal_445,
-    q_preagg_before_join,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_preagg_equals_postagg(spark, sf_dir):
-    out = {r["c_mktsegment"]: r for r in q_preagg_before_join(spark, sf_dir).collect()}
+    out = {r["c_mktsegment"]: r for r in REGISTRY["q_preagg_before_join"](spark, sf_dir).collect()}
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     direct = {

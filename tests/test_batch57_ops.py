@@ -7,15 +7,15 @@ import re
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_entity_sample,
     q_nested_schema_pruning,
-    q_rate_smoothed,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_smoothing_pulls_toward_prior(spark, sf_dir):
-    for r in q_rate_smoothed(spark, sf_dir).collect():
+    for r in REGISTRY["q_rate_smoothed"](spark, sf_dir).collect():
         prior = 1 / 20
         raw, sm = r["raw_rate"], r["smoothed_rate"]
         # smoothed lies between the raw rate and the prior mean

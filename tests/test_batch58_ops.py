@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_collation_group,
+    REGISTRY,
     q_interval_daytime,
     q_str_to_map,
 )
@@ -13,7 +13,7 @@ from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_collation_collapses_case_variants(spark, sf_dir):
-    rows = {r["seg_ci"]: r for r in q_collation_group(spark, sf_dir).collect()}
+    rows = {r["seg_ci"]: r for r in REGISTRY["q_collation_group"](spark, sf_dir).collect()}
     cust = load_table(spark, sf_dir, "customer")
     segs = {r["c_mktsegment"].lower() for r in cust.select("c_mktsegment").distinct().collect()}
     assert set(rows) == segs

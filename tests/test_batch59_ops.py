@@ -5,8 +5,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_dedup_policy_matrix,
-    q_monotonic_ids,
     q_negative_sampling,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
@@ -30,7 +30,7 @@ def test_negative_sampling_deterministic(spark, sf_dir):
 
 
 def test_monotonic_ids_unique(spark, sf_dir):
-    r = q_monotonic_ids(spark, sf_dir).first()
+    r = REGISTRY["q_monotonic_ids"](spark, sf_dir).first()
     assert r["ids_unique"]
     assert r["n_rows"] == load_table(spark, sf_dir, "orders").count()
 

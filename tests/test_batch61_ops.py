@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_role_playing_dim,
+    REGISTRY,
     q_rolling_slope,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
@@ -23,7 +23,7 @@ def test_rolling_slope_identity_and_windows(spark, sf_dir):
 
 
 def test_role_playing_lag_structure(spark, sf_dir):
-    rows = q_role_playing_dim(spark, sf_dir).collect()
+    rows = REGISTRY["q_role_playing_dim"](spark, sf_dir).collect()
     li = load_table(spark, sf_dir, "lineitem")
     assert sum(r["n_lines"] for r in rows) == li.count()
     # both roles resolve through the same dim: year domains coincide

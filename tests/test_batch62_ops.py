@@ -5,14 +5,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_accumulating_snapshot,
-    q_unknown_member,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_unknown_member_reconciles(spark, sf_dir):
-    rows = {r["segment"]: r for r in q_unknown_member(spark, sf_dir).collect()}
+    rows = {r["segment"]: r for r in REGISTRY["q_unknown_member"](spark, sf_dir).collect()}
     orders = load_table(spark, sf_dir, "orders")
     # no fact row is lost: totals reconcile to the fact table
     assert sum(r["n_orders"] for r in rows.values()) == orders.count()

@@ -6,17 +6,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     _try_cast_bigint_sql,
-    q_empty_relation,
-    q_inline_dim_join,
     q_try_cast_matrix,
-    q_union_distinct,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_empty_relation_schema_survives(spark, sf_dir):
-    df = q_empty_relation(spark, sf_dir)
+    df = REGISTRY["q_empty_relation"](spark, sf_dir)
     assert df.count() == 0
     assert df.columns == ["o_orderpriority", "n"]
     # the contradiction folds the plan to an empty local relation: no scan
@@ -25,7 +23,7 @@ def test_empty_relation_schema_survives(spark, sf_dir):
 
 
 def test_union_distinct_is_distinct(spark, sf_dir):
-    out = q_union_distinct(spark, sf_dir)
+    out = REGISTRY["q_union_distinct"](spark, sf_dir)
     assert out.count() == out.distinct().count()
     cust = load_table(spark, sf_dir, "customer")
     supp = load_table(spark, sf_dir, "supplier")
@@ -36,7 +34,7 @@ def test_union_distinct_is_distinct(spark, sf_dir):
 
 
 def test_inline_dim_covers_domain(spark, sf_dir):
-    rows = q_inline_dim_join(spark, sf_dir).collect()
+    rows = REGISTRY["q_inline_dim_join"](spark, sf_dir).collect()
     orders = load_table(spark, sf_dir, "orders")
     # policy map covers every priority: counts reconcile to the fact table
     assert sum(r["n_orders"] for r in rows) == orders.count()

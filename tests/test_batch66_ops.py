@@ -5,8 +5,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_debounce,
-    q_hierarchical_share,
     q_vocab_drift,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
@@ -35,7 +35,7 @@ def test_debounce_partition_of_input(spark, sf_dir):
 
 
 def test_hierarchical_share_identities(spark, sf_dir):
-    rows = q_hierarchical_share(spark, sf_dir).collect()
+    rows = REGISTRY["q_hierarchical_share"](spark, sf_dir).collect()
     # shares within each region sum to 1
     by_region: dict[str, float] = {}
     for r in rows:

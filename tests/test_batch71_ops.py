@@ -5,14 +5,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_freshness_audit,
-    q_group_vs_rest,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_group_vs_rest_signs_consistent(spark, sf_dir):
-    rows = q_group_vs_rest(spark, sf_dir).collect()
+    rows = REGISTRY["q_group_vs_rest"](spark, sf_dir).collect()
     assert len(rows) == 5
     for r in rows:
         assert r["diff_den"] > 0

@@ -4,15 +4,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_project_spark.queries import (
-    q_graph_2hop,
-    q_item_similarity,
-)
+from etl_pipeline_project_spark.queries import REGISTRY
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_item_similarity_bounds(spark, sf_dir):
-    rows = q_item_similarity(spark, sf_dir).collect()
+    rows = REGISTRY["q_item_similarity"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r["part_a"] < r["part_b"]
@@ -22,7 +19,7 @@ def test_item_similarity_bounds(spark, sf_dir):
 
 
 def test_two_hop_supersets_direct(spark, sf_dir):
-    rows = q_graph_2hop(spark, sf_dir).collect()
+    rows = REGISTRY["q_graph_2hop"](spark, sf_dir).collect()
     assert rows
     li = load_table(spark, sf_dir, "lineitem")
     n_parts = li.select("l_partkey").distinct().count()

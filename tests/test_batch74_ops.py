@@ -5,14 +5,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_composition_shares,
+    REGISTRY,
     q_max_concurrency,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_composition_shares_sum_to_one_per_year(spark, sf_dir):
-    rows = q_composition_shares(spark, sf_dir).collect()
+    rows = REGISTRY["q_composition_shares"](spark, sf_dir).collect()
     by_year: dict[int, float] = {}
     for r in rows:
         by_year[r["yr"]] = by_year.get(r["yr"], 0.0) + r["share"]

@@ -5,14 +5,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_column_checksums,
-    q_onehot_encode,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_onehot_rows_sum_to_counts(spark, sf_dir):
-    rows = q_onehot_encode(spark, sf_dir).collect()
+    rows = REGISTRY["q_onehot_encode"](spark, sf_dir).collect()
     orders = load_table(spark, sf_dir, "orders")
     assert len(rows) == orders.select("o_custkey").distinct().count()
     for r in rows:

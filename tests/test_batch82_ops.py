@@ -7,7 +7,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_bipartite_degree,
+    REGISTRY,
     q_currency_convert,
     q_partition_checksums,
     q_shard_manifest,
@@ -65,7 +65,7 @@ def test_shard_manifest_budget_crossing(spark, sf_dir):
 
 
 def test_bipartite_degree_totals(spark, sf_dir):
-    d = q_bipartite_degree(spark, sf_dir)
+    d = REGISTRY["q_bipartite_degree"](spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     n_parts = li.select("l_partkey").distinct().count()
     assert d.agg(F.sum("n_parts")).first()[0] == n_parts

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_audience_overlap,
+    REGISTRY,
     q_event_rate_alert,
     q_session_census,
     q_skew_report,
@@ -53,7 +53,7 @@ def test_session_census_reconciles_events(spark, sf_dir):
 
 
 def test_audience_overlap_bounds(spark, sf_dir):
-    o = q_audience_overlap(spark, sf_dir)
+    o = REGISTRY["q_audience_overlap"](spark, sf_dir)
     rows = o.collect()
     # 5 event types -> 10 unordered pairs
     assert len(rows) == 10

@@ -5,14 +5,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_join_existence_matrix,
+    REGISTRY,
     q_pivot_multi_agg,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_existence_matrix_partitions_customers(spark, sf_dir):
-    m = q_join_existence_matrix(spark, sf_dir)
+    m = REGISTRY["q_join_existence_matrix"](spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     assert m.agg(F.sum("n_customers")).first()[0] == cust.count()
     # customers without orders can't have urgent/1998 flags set

@@ -8,9 +8,9 @@ import hashlib
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
+    REGISTRY,
     q_bitemporal_join,
     q_kfold_assign,
-    q_semi_additive_balance,
     q_stream_stream_left_join,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
@@ -87,7 +87,7 @@ def test_kfold_reproducible_and_complete(spark, sf_dir):
 
 
 def test_semi_additive_sums_closing_balances_only(spark, sf_dir):
-    rows = sorted(q_semi_additive_balance(spark, sf_dir).collect(), key=lambda r: r["day"])
+    rows = sorted(REGISTRY["q_semi_additive_balance"](spark, sf_dir).collect(), key=lambda r: r["day"])
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     # independent recompute of one day's closing total
     import math

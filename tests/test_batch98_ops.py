@@ -8,16 +8,15 @@ import math
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_diff_in_diff,
+    REGISTRY,
     q_neyman_allocation,
-    q_ratio_delta_method,
     q_term_pmi,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_diff_in_diff_reconstructs_from_cells(spark, sf_dir):
-    row = q_diff_in_diff(spark, sf_dir).first()
+    row = REGISTRY["q_diff_in_diff"](spark, sf_dir).first()
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     n = ev.count()
     assert row["n_t1"] + row["n_t2"] + row["n_c1"] + row["n_c2"] == n
@@ -38,7 +37,7 @@ def test_diff_in_diff_reconstructs_from_cells(spark, sf_dir):
 
 
 def test_ratio_delta_method_groups(spark, sf_dir):
-    rows = {r["grp"]: r for r in q_ratio_delta_method(spark, sf_dir).collect()}
+    rows = {r["grp"]: r for r in REGISTRY["q_ratio_delta_method"](spark, sf_dir).collect()}
     assert sorted(rows) == [0, 1]
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     for grp, r in rows.items():

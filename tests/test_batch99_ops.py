@@ -8,7 +8,7 @@ import math
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_cuped,
+    REGISTRY,
     q_mde_power,
     q_post_stratified_ate,
     q_quantile_treatment_effect,
@@ -17,7 +17,7 @@ from etl_pipeline_project_spark.sources.readers import load_table
 
 
 def test_cuped_adjustment_properties(spark, sf_dir):
-    rows = {r["grp"]: r for r in q_cuped(spark, sf_dir).collect()}
+    rows = {r["grp"]: r for r in REGISTRY["q_cuped"](spark, sf_dir).collect()}
     assert sorted(rows) == [0, 1]
     thetas = {r["theta"] for r in rows.values()}
     assert len(thetas) == 1  # theta is pooled, identical per group

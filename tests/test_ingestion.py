@@ -9,7 +9,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from etl_pipeline_project_spark.sources.catalog import ensure_table, register_testdata_views
+from etl_pipeline_project_spark.sources.catalog import ensure_table
 from etl_pipeline_project_spark.sources.ingestion import (
     RestIngestion,
     ingest_batch,
@@ -126,11 +126,6 @@ def test_ensure_table_idempotent(spark, tmp_path):
     ensure_table(spark, "t_places_ddl", OPERATIONAL_SCHEMAS["places"], location=str(tmp_path / "p"))
     assert spark.table("t_places_ddl").columns == [f.name for f in OPERATIONAL_SCHEMAS["places"].fields]
     spark.sql("DROP TABLE t_places_ddl")
-
-
-def test_register_testdata_views(spark, sf_dir):
-    register_testdata_views(spark, sf_dir)
-    assert spark.sql("SELECT count(*) AS n FROM region").collect()[0]["n"] == 5
 
 
 def test_lakehouse_connectors_gate_cleanly(spark):

@@ -1,21 +1,17 @@
 """Round-4 hardening tests.
 
-1. `asof_join_grouped` is now a streaming sort-merge whose executor memory
-   is one Arrow batch regardless of key skew — exercised here with a
-   pathological distribution (one key holding 90% of all rows) against the
-   window-composition form as the oracle.
-2. `asof_join_cogroup` (the cogroup-API form) materializes whole groups and
-   guards that honestly with ``max_group_rows``.
+`asof_join_grouped` is a streaming sort-merge whose executor memory is one
+Arrow batch regardless of key skew — exercised here with a pathological
+distribution (one key holding 90% of all rows) against the
+window-composition form as the oracle.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.operators.joins import (
     asof_join,
-    asof_join_cogroup,
     asof_join_grouped,
 )
 
@@ -80,30 +76,6 @@ def test_asof_grouped_small_batches_force_cross_batch_state(spark):
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
         else:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-
-def test_asof_cogroup_guard_trips_on_mega_group(spark):
-    left, right = _skewed_frames(spark)
-    out = asof_join_cogroup(
-        left, right, key="k", left_ts="ts", right_ts="ts",
-        right_value="val", max_group_rows=1000,
-    )
-    with pytest.raises(Exception, match="max_group_rows"):
-        out.collect()
-
-
-def test_asof_cogroup_matches_within_bound(spark):
-    left, right = _skewed_frames(spark)
-    left = left.localCheckpoint()
-    cg = asof_join_cogroup(
-        left, right, key="k", left_ts="ts", right_ts="ts", right_value="val"
-    ).select("lid", "r_val")
-    stream = asof_join_grouped(
-        left, right, key="k", left_ts="ts", right_ts="ts", right_value="val"
-    ).select("lid", "r_val")
-    a = {r["lid"]: r["r_val"] for r in cg.collect()}
-    b = {r["lid"]: r["r_val"] for r in stream.collect()}
-    assert a == b
 
 
 def test_cents_mod97_matches_sql_on_negatives_and_half_cents(spark):

@@ -78,3 +78,51 @@ def test_sized_state_store_noop_when_unsized(spark, monkeypatch):
     with ops.sized_state_store(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_stream_keys_size_state_through_stream_state_partitions(spark, sf_dir, monkeypatch):
+    """The stateful streaming keys take their state-store width from
+    ``stream_state_partitions`` (via ``run_to_memory``), not from a literal
+    of their own: every stateful operator's progress reports exactly that
+    many shuffle partitions."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from etl_pipeline_project_spark.queries import REGISTRY
+    from etl_pipeline_project_spark.streaming.ops import stream_state_partitions
+
+    class Collect(StreamingQueryListener):
+        def __init__(self):
+            self.parts: list[int] = []
+            self.done = threading.Event()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.parts += [op.numShufflePartitions for op in event.progress.stateOperators]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done.set()
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        want = int(stream_state_partitions(spark))
+        for key in ["q_stream_stream_join", "q_stream_stream_left_join", "q_stream_window_append"]:
+            listener = Collect()
+            spark.streams.addListener(listener)
+            try:
+                REGISTRY[key](spark, sf_dir).collect()
+                assert listener.done.wait(60), key
+            finally:
+                spark.streams.removeListener(listener)
+            assert listener.parts, key
+            assert set(listener.parts) == {want}, (key, listener.parts)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

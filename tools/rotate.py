@@ -72,16 +72,17 @@ def impl_diff(rev: str) -> int:
     import subprocess
 
     lines = open(QPATH).read().splitlines()
-    # span of each key: from its @_q("key", ...) decorator line to the
+    # span of each key: from its @_q("key", ...) decorator (or its
+    # _sql_q("key", ...) registration) line to the
     # line before the next top-level def/@ (registration is decorator-
     # based, so twin SQL edits land inside the span too)
     spans: list[tuple[int, int, str]] = []  # (start, end, key) 1-based
     starts: list[tuple[int, str]] = []
     for i, ln in enumerate(lines, 1):
-        m = re.match(r'@_q\(\s*$|@_q\("(?P<k>q_\w+)"', ln)
+        m = re.match(r'(?:@_q|_sql_q)\(\s*$|(?:@_q|_sql_q)\("(?P<k>q_\w+)"', ln)
         if m and m.group("k"):
             starts.append((i, m.group("k")))
-        elif ln.startswith("@_q("):
+        elif ln.startswith(("@_q(", "_sql_q(")):
             # key on the next line(s)
             for j in range(i, min(i + 3, len(lines))):
                 km = re.search(r'"(q_\w+)"', lines[j])
