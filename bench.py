@@ -7,7 +7,9 @@ driver-side collect, no filesystem write). Per key: one untimed warm-up
 execution, then the median of N_RUNS-1 timed runs (cheap keys) or one
 timed run (keys whose warm-up exceeded HEAVY_CUTOFF_S — steady-state
 variance there is negligible and repeated multi-second runs dominate the
-harness wall-clock).
+harness wall-clock). The JSON also records ``n_runs`` (timed runs per key)
+and ``provenance``: the git SHA, whether the tree was dirty, and
+``SPARK_GRAFT_CPUS``.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ from __future__ import annotations
 import json
 import os
 import statistics
+import subprocess
 import sys
 import time
 
@@ -73,6 +76,29 @@ def _host_noise(start: list[int] | None, end: list[int] | None) -> dict:
     return meta
 
 
+def _provenance() -> dict:
+    """Which commit and CPU count produced the run: the HEAD SHA, whether
+    the tree differed from it (tracked edits or untracked files), and
+    ``SPARK_GRAFT_CPUS`` as the session sized itself from it. SHA and flag
+    are null outside a git checkout."""
+    here = os.path.dirname(os.path.abspath(__file__))
+
+    def git(*args: str) -> str | None:
+        try:
+            p = subprocess.run(["git", *args], cwd=here, capture_output=True, text=True)
+        except OSError:
+            return None
+        return p.stdout.strip() if p.returncode == 0 else None
+
+    sha = git("rev-parse", "HEAD")
+    status = git("status", "--porcelain") if sha else None
+    return {
+        "git_sha": sha,
+        "git_dirty": None if status is None else bool(status),
+        "cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+    }
+
+
 def _run_keys(spark, keys, sf_dir):
     """Time a list of registry keys against an existing session. Per key:
     one untimed warm-up execution (plan compile + code gen + shuffle-file
@@ -81,8 +107,10 @@ def _run_keys(spark, keys, sf_dir):
     (steady-state variance on multi-second jobs is far below the cutoff,
     and the registry is >400 keys: 3x runs on every heavy key would
     triple a wall-clock dominated by exactly the keys that need it
-    least)."""
+    least). Returns each key's median, its number of timed runs, and
+    the keys that raised."""
     timings: dict[str, float] = {}
+    n_runs: dict[str, int] = {}
     errors: dict[str, str] = {}
     for key in keys:
         # one broken key must not zero out the whole benchmark: record the
@@ -102,10 +130,11 @@ def _run_keys(spark, keys, sf_dir):
                 ).save()
                 runs.append(time.perf_counter() - t0)
             timings[key] = round(statistics.median(runs), 4)
+            n_runs[key] = n_timed
         except Exception as exc:  # noqa: BLE001
             errors[key] = f"{type(exc).__name__}: {exc}"[:300]
             sys.stderr.write(f"BENCH ERROR {key}: {errors[key]}\n")
-    return timings, errors
+    return timings, n_runs, errors
 
 
 def main() -> None:
@@ -129,9 +158,9 @@ def main() -> None:
         REGISTRY["q_scan_table"](spark, sf_dir).write.mode("overwrite").format(
             "noop"
         ).save()
-        timings, errors = _run_keys(spark, keys, sf_dir)
+        timings, n_runs, errors = _run_keys(spark, keys, sf_dir)
         with open(out_path, "w") as fh:
-            json.dump({"timings": timings, "errors": errors}, fh)
+            json.dump({"timings": timings, "n_runs": n_runs, "errors": errors}, fh)
         return
 
     # Streaming keys carry fixed micro-batch/state-store setup cost that a
@@ -146,6 +175,7 @@ def main() -> None:
         "SPARK_GRAFT_NO_ISOLATE", ""
     ) != "1"
 
+    provenance = _provenance()
     cpu_start = _cpu_sample()
 
     ordered = sorted(REGISTRY, key=lambda k: (_is_streaming_key(k), k))
@@ -157,8 +187,7 @@ def main() -> None:
     REGISTRY["q_scan_table"](spark, sf_dir).write.mode("overwrite").format("noop").save()
 
     if isolate and stream_keys:
-        timings, errors = _run_keys(spark, batch_keys, sf_dir)
-        import subprocess
+        timings, n_runs, errors = _run_keys(spark, batch_keys, sf_dir)
         import tempfile
 
         env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
@@ -182,6 +211,7 @@ def main() -> None:
                 with open(child_out) as fh:
                     payload = json.load(fh)
                 timings.update(payload["timings"])
+                n_runs.update(payload["n_runs"])
                 errors.update(payload["errors"])
             except Exception:  # noqa: BLE001
                 for k in stream_keys:
@@ -194,13 +224,14 @@ def main() -> None:
             except OSError:
                 pass
     else:
-        timings, errors = _run_keys(spark, ordered, sf_dir)
+        timings, n_runs, errors = _run_keys(spark, ordered, sf_dir)
 
     total = round(sum(timings.values()), 4)
     host = _host_noise(cpu_start, _cpu_sample())
     out = {
         "metric": "total_median_sec_all_queries",
         "host": host,
+        "provenance": provenance,
         # a partial total (some keys errored) is NOT comparable round-over-
         # round — summing only the survivors would masquerade as a speedup.
         # value goes null on any error; the partial sum moves to its own
@@ -208,6 +239,7 @@ def main() -> None:
         "value": None if errors else total,
         "unit": "sec",
         "queries": timings,
+        "n_runs": n_runs,
         "sf": _sf_of(sf_dir),
     }
     if errors:

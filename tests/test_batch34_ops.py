@@ -63,6 +63,35 @@ def test_spearman_in_unit_interval(spark, sf_dir):
         assert r["n"] > 0
 
 
+def test_spearman_matches_twin_on_null_measures(spark, sf_dir, tmp_path):
+    """Rows with a NULL quantity, a NULL price or both take no part in
+    either rank, in the side moments or in n; the DuckDB twin agrees."""
+    import duckdb
+
+    from etl_pipeline_project_spark.queries import ORACLE
+
+    con = duckdb.connect()
+    con.execute(
+        f"""COPY (
+          SELECT * REPLACE (
+            CASE WHEN l_orderkey % 7 = 0 THEN NULL ELSE l_quantity END AS l_quantity,
+            CASE WHEN l_orderkey % 11 = 0 THEN NULL ELSE l_extendedprice END
+              AS l_extendedprice)
+          FROM '{sf_dir}/lineitem.parquet'
+        ) TO '{tmp_path}/lineitem.parquet' (FORMAT PARQUET)"""
+    )
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{tmp_path}/lineitem.parquet'")
+    assert min(con.execute(
+        "SELECT count(*) FILTER (l_quantity IS NULL AND l_extendedprice IS NULL),"
+        " count(*) FILTER (l_quantity IS NULL AND l_extendedprice IS NOT NULL),"
+        " count(*) FILTER (l_quantity IS NOT NULL AND l_extendedprice IS NULL)"
+        " FROM lineitem"
+    ).fetchone()) > 0
+    want = sorted(con.execute(ORACLE["q_spearman_rho"]).fetchall())
+    got = sorted(tuple(r) for r in q_spearman_rho(spark, str(tmp_path)).collect())
+    assert got == want
+
+
 def test_spearman_perfect_monotone_is_one(spark, sf_dir):
     # rank-correlating a column with itself must give rho == 1 exactly
     from etl_pipeline_project_spark.session import get_spark  # noqa: F401

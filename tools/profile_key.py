@@ -7,6 +7,9 @@ a bench-identical execution into:
 - exec_s:    noop-sink execution of the pre-built frame
 - n_jobs:    Spark jobs launched by the execution (scheduler-level fixed
              cost: each job is a driver round-trip + DAG schedule)
+- compiles:  generated classes compiled by Janino (Spark's
+             CodegenMetrics compilation count) — codegen set-up; 0 when
+             the key's classes are still in Spark's codegen cache
 - total_s:   build + exec (what bench.py's timed region measures)
 
 Usage: python tools/profile_key.py [sf_dir] key [key ...]
@@ -34,17 +37,22 @@ def main() -> None:
     spark = get_spark("profile")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     # warm the session
     REGISTRY["q_scan_table"](spark, sf_dir).write.mode("overwrite").format(
         "noop"
     ).save()
 
-    print(f"{'key':38s} {'build_s':>8s} {'exec_s':>8s} {'total_s':>8s} {'jobs':>5s}")
+    print(
+        f"{'key':38s} {'build_s':>8s} {'exec_s':>8s} {'total_s':>8s} {'jobs':>5s} "
+        f"{'compiles':>8s}"
+    )
     for key in keys:
         fn = REGISTRY[key]
         # warm-up (bench does the same)
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         jobs_before = len(tracker.getJobIdsForGroup(None) or [])
+        compiles_before = codegen.METRIC_COMPILATION_TIME().getCount()
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         t1 = time.perf_counter()
@@ -52,10 +60,11 @@ def main() -> None:
         t2 = time.perf_counter()
         # job ids are global; count all jobs created during the timed region
         n_jobs = len(tracker.getJobIdsForGroup(None) or [])
+        compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles_before
         build, ex = t1 - t0, t2 - t1
         print(
             f"{key:38s} {build:8.3f} {ex:8.3f} {build + ex:8.3f} "
-            f"{n_jobs - jobs_before:5d}"
+            f"{n_jobs - jobs_before:5d} {compiles:8d}"
         )
 
 
