@@ -7,8 +7,8 @@ driver-side collect, no filesystem write). Per key: one untimed warm-up
 execution, then the median of N_RUNS-1 timed runs (cheap keys) or one
 timed run (keys whose warm-up exceeded HEAVY_CUTOFF_S — steady-state
 variance there is negligible and repeated multi-second runs dominate the
-harness wall-clock). The JSON also records ``n_runs`` (timed runs per key)
-and ``provenance``: the git SHA, whether the tree was dirty, and
+harness wall-clock). The JSON also records each key's fastest timed run
+(``queries_min``), ``n_runs`` (timed runs per key) and ``provenance``: the git SHA, whether the tree was dirty, and
 ``SPARK_GRAFT_CPUS``.
 """
 
@@ -107,9 +107,10 @@ def _run_keys(spark, keys, sf_dir):
     (steady-state variance on multi-second jobs is far below the cutoff,
     and the registry is >400 keys: 3x runs on every heavy key would
     triple a wall-clock dominated by exactly the keys that need it
-    least). Returns each key's median, its number of timed runs, and
-    the keys that raised."""
+    least). Returns each key's median and minimum, its number of timed
+    runs, and the keys that raised."""
     timings: dict[str, float] = {}
+    mins: dict[str, float] = {}
     n_runs: dict[str, int] = {}
     errors: dict[str, str] = {}
     for key in keys:
@@ -130,11 +131,12 @@ def _run_keys(spark, keys, sf_dir):
                 ).save()
                 runs.append(time.perf_counter() - t0)
             timings[key] = round(statistics.median(runs), 4)
+            mins[key] = round(min(runs), 4)
             n_runs[key] = n_timed
         except Exception as exc:  # noqa: BLE001
             errors[key] = f"{type(exc).__name__}: {exc}"[:300]
             sys.stderr.write(f"BENCH ERROR {key}: {errors[key]}\n")
-    return timings, n_runs, errors
+    return timings, mins, n_runs, errors
 
 
 def main() -> None:
@@ -158,9 +160,12 @@ def main() -> None:
         REGISTRY["q_scan_table"](spark, sf_dir).write.mode("overwrite").format(
             "noop"
         ).save()
-        timings, n_runs, errors = _run_keys(spark, keys, sf_dir)
+        timings, mins, n_runs, errors = _run_keys(spark, keys, sf_dir)
         with open(out_path, "w") as fh:
-            json.dump({"timings": timings, "n_runs": n_runs, "errors": errors}, fh)
+            json.dump(
+                {"timings": timings, "mins": mins, "n_runs": n_runs, "errors": errors},
+                fh,
+            )
         return
 
     # Streaming keys carry fixed micro-batch/state-store setup cost that a
@@ -187,7 +192,7 @@ def main() -> None:
     REGISTRY["q_scan_table"](spark, sf_dir).write.mode("overwrite").format("noop").save()
 
     if isolate and stream_keys:
-        timings, n_runs, errors = _run_keys(spark, batch_keys, sf_dir)
+        timings, mins, n_runs, errors = _run_keys(spark, batch_keys, sf_dir)
         import tempfile
 
         env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
@@ -211,6 +216,7 @@ def main() -> None:
                 with open(child_out) as fh:
                     payload = json.load(fh)
                 timings.update(payload["timings"])
+                mins.update(payload["mins"])
                 n_runs.update(payload["n_runs"])
                 errors.update(payload["errors"])
             except Exception:  # noqa: BLE001
@@ -224,7 +230,7 @@ def main() -> None:
             except OSError:
                 pass
     else:
-        timings, n_runs, errors = _run_keys(spark, ordered, sf_dir)
+        timings, mins, n_runs, errors = _run_keys(spark, ordered, sf_dir)
 
     total = round(sum(timings.values()), 4)
     host = _host_noise(cpu_start, _cpu_sample())
@@ -239,6 +245,7 @@ def main() -> None:
         "value": None if errors else total,
         "unit": "sec",
         "queries": timings,
+        "queries_min": mins,
         "n_runs": n_runs,
         "sf": _sf_of(sf_dir),
     }

@@ -100,16 +100,6 @@ def sum_by_dim(
     )
 
 
-def rollup_by(df: DataFrame, dims: list[str], amount: str, sum_col: str = "total") -> DataFrame:
-    """ROLLUP over a dimension hierarchy (motivated by proyek→departemen,
-    `data/transformation_dw.py:47-61`). Emits grouping indicators so
-    subtotal rows are distinguishable from genuine-null groups."""
-    return df.rollup(*dims).agg(
-        money_sum(F.col(amount)).alias(sum_col),
-        *[F.grouping(d).cast("int").alias(f"g_{d}") for d in dims],
-    )
-
-
 def count_distinct_by(df: DataFrame, dims: list[str], target: str) -> DataFrame:
     """Exact + approximate distinct counts per group (generalizes the
     reference's dedup-everywhere pattern, SURVEY §2.D). Exact
@@ -118,18 +108,4 @@ def count_distinct_by(df: DataFrame, dims: list[str], target: str) -> DataFrame:
     return df.groupBy(*dims).agg(
         F.countDistinct(target).alias(f"n_{target}"),
         F.approx_count_distinct(target).alias(f"approx_n_{target}"),
-    )
-
-
-def windowed_daily(df: DataFrame, ts: str, value: str) -> DataFrame:
-    """Tumbling 1-day aggregate — the batch twin of the reference's daily
-    Airflow cadence (`dags/tourism_finance_etl_dag.py:15`)."""
-    win = F.window(F.col(ts), "1 day")
-    return (
-        df.groupBy(win)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            money_sum(F.col(value)).alias("sum_value"),
-        )
-        .select(F.col("window.start").alias("day_start"), "n_events", "sum_value")
     )

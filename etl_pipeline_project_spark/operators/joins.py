@@ -220,52 +220,6 @@ def asof_join_grouped(
     return stream.mapInPandas(merge_stream, out_schema)
 
 
-def fuzzy_match(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    corpus_id: str,
-    text_col: str,
-    max_distance: int,
-    block_col: str | None = None,
-) -> DataFrame:
-    """Approximate string matching: levenshtein ≤ ``max_distance``
-    between a small query set and a large corpus. The query side is
-    broadcast (small by contract — entity-resolution probes, not a
-    second corpus), so the corpus never shuffles; candidate pairs are
-    pruned **before** the edit-distance evaluation by (a) an optional
-    equality block (e.g. same brand/prefix) folded into the join key and
-    (b) the length band |len(a) − len(b)| ≤ max_distance, which is a
-    necessary condition for edit distance and removes the bulk of the
-    cross product JVM-side. At 100 TB the cost is one broadcast
-    map-side join pass; levenshtein runs only on band survivors."""
-    from pyspark.sql.functions import broadcast
-
-    q = queries.select(
-        F.col(query_id).alias("q_id"),
-        F.col(text_col).alias("q_text"),
-        *([F.col(block_col).alias("q_block")] if block_col else []),
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("c_id"),
-        F.col(text_col).alias("c_text"),
-        *([F.col(block_col).alias("c_block")] if block_col else []),
-    )
-    cond = F.col("q_id") != F.col("c_id")
-    if block_col:
-        cond = cond & (F.col("q_block") == F.col("c_block"))
-    band = (
-        F.abs(F.length("q_text") - F.length("c_text")) <= max_distance
-    )
-    dist = F.levenshtein("q_text", "c_text")
-    return (
-        c.join(broadcast(q), cond & band)
-        .withColumn("edit_distance", dist)
-        .filter(F.col("edit_distance") <= max_distance)
-        .select("q_id", "c_id", "edit_distance")
-    )
-
-
 def coarse_bucket_semi_join(
     fact: DataFrame,
     dim: DataFrame,

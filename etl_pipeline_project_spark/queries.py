@@ -24,7 +24,7 @@ import re
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -45,11 +45,7 @@ from etl_pipeline_project_spark.operators.joins import anti_incremental, left_en
 from etl_pipeline_project_spark.operators.profiling import dq_violations, profile_columns
 from etl_pipeline_project_spark.operators.relational import select_existing
 from etl_pipeline_project_spark.operators.setops import union_all, union_single_column
-from etl_pipeline_project_spark.operators.windows import (
-    global_order_stats,
-    grouped_order_stats,
-    topk_per_group,
-)
+from etl_pipeline_project_spark.operators.windows import topk_per_group
 from etl_pipeline_project_spark.schemas import TESTDATA_TABLES
 from etl_pipeline_project_spark.sources.readers import load_table, scan_keys
 
@@ -62,36 +58,15 @@ def _msum(expr: str) -> str:
     int128→double conversion differs from the JVM by 1 ULP)."""
     return f"CAST(CAST(ROUND(SUM(CAST({expr} AS DECIMAL(38,10))), 2) AS DECIMAL(38,2)) AS DOUBLE)"
 
-def _grouped_cdf(
-    counts: DataFrame,
-    group: str,
-    value_col: str,
-    count_col: str,
-    cum: str,
-    tot: str,
-) -> DataFrame:
-    """Distinct-value CDF per group, two-pass: inclusive running count
-    ``cum`` and per-group total ``tot`` over a (group, value, count)
-    table — the shared engine of every count-based quantile key
-    (q_quantiles / q_percentile_disc / q_iqr_outliers / q_decile_spread /
-    q_quantile_treatment_effect / q_weighted_median).
 
-    Before round 9 these keys ran ``SUM(c) OVER (PARTITION BY enum ORDER
-    BY value)`` directly: the distinct-value table scales with the
-    corpus's value domain, so each enum reducer still buffered
-    O(distinct/|enum|) rows (round-8 verdict item 1). grouped_order_stats
-    range-partitions on the composite (group, value) key instead; the
-    group totals ride the helper's ``grp_n_col`` (round 12, guide §2.4):
-    Σ of the tiny per-range aggregate's counts — identical values to a
-    fresh ``SUM(c) GROUP BY g`` over the counts frame, without re-running
-    the upstream fact-table aggregate a second time (plan diff: one
-    HashAggregate-over-scan subtree fewer, see OPTIMIZATION_r12.md)."""
-    return grouped_order_stats(
-        counts,
-        [group],
-        [value_col],
-        cum_cols={count_col: cum},
-        grp_sum_cols={count_col: tot},
+def _ranked(df: DataFrame, *order: Column | str) -> DataFrame:
+    """``df`` plus its 1-based global position ``rn`` under ``order`` and
+    its row count ``n`` — the plain ``ROW_NUMBER() OVER (ORDER BY ...)`` /
+    ``COUNT(*) OVER ()`` pair of the rank-bucketing keys."""
+    return df.select(
+        "*",
+        F.row_number().over(Window.orderBy(*order)).cast("long").alias("rn"),
+        F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
     )
 
 
@@ -2330,7 +2305,7 @@ _sql_q(
 )
 
 
-@_q(
+_sql_q(
     "q_window_distribution",
     """
     SELECT o_orderkey, o_orderpriority,
@@ -2341,48 +2316,6 @@ _sql_q(
     WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
     """,
 )
-def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution window functions (percent_rank / cume_dist / ntile) —
-    the ranking complement to q_window_rank. The window orders by a total
-    key (totalprice, orderkey) so every function is deterministic — and
-    because the order is TOTAL, all three reduce to closed forms of the
-    per-group row number rn and group size n: percent_rank =
-    (rn−1)/(n−1) (0 for a 1-row group), cume_dist = rn/n (no peers ⇒
-    rows ≤ current = rn), and ntile(k)'s first-buckets remainder rule
-    with q = n div k, r = n mod k. Round 9 computes rn via
-    grouped_order_stats instead of a window partitioned by the 5-way
-    o_orderpriority enum over raw orders (O(corpus/5) rows per reducer —
-    round-8 verdict item 1); n is a fixed-enum aggregate broadcast back.
-    Each engine's native percent_rank/cume_dist evaluates the identical
-    IEEE division of exact small ints, so the doubles hash-match."""
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.select("o_orderkey", "o_orderpriority", "o_totalprice")
-    g = grouped_order_stats(
-        base,
-        ["o_orderpriority"],
-        ["o_totalprice", "o_orderkey"],
-        rn_col="rn",
-        grp_n_col="n",
-    )
-    rn, n = F.col("rn"), F.col("n")
-    # ntile's remainder goes to the FIRST buckets: q = n div 4,
-    # r = n mod 4; first r buckets hold q+1 rows, the rest hold q.
-    # (q = 0 never reaches the ELSE branch: (q+1)*r = n there.)
-    quartile = F.expr(
-        "CASE WHEN rn <= ((n div 4) + 1) * (n % 4)"
-        "     THEN (rn - 1) div ((n div 4) + 1) + 1"
-        "     ELSE (n % 4) + (rn - ((n div 4) + 1) * (n % 4) - 1)"
-        "          div (n div 4) + 1 END"
-    )
-    return g.select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.when(n > 1, (rn - 1).cast("double") / (n - 1).cast("double"))
-        .otherwise(F.lit(0.0))
-        .alias("pct_rank"),
-        (rn.cast("double") / n.cast("double")).alias("cume"),
-        quartile.cast("int").alias("quartile"),
-    )
 
 
 @_q(
@@ -5203,7 +5136,12 @@ def q_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = li.groupBy("l_returnflag", "l_extendedprice").agg(
         F.count(F.lit(1)).alias("c")
     )
-    dist = _grouped_cdf(counts, "l_returnflag", "l_extendedprice", "c", "cum", "n")
+    grp = Window.partitionBy("l_returnflag")
+    dist = counts.select(
+        "*",
+        F.sum("c").over(grp.orderBy(F.col("l_extendedprice").asc_nulls_last())).alias("cum"),
+        F.sum("c").over(grp).alias("n"),
+    )
     return dist.groupBy("l_returnflag").agg(
         F.min(
             F.when(F.col("cum") * 2 >= F.col("n"), F.col("l_extendedprice"))
@@ -5232,23 +5170,20 @@ def q_window_rank_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     (group, value): fully deterministic without a row-level tie-break
     (row_number is deliberately absent — it IS arbitrary on ties).
 
-    Round 9 computes both ranks FROM the distinct-value table instead of
-    windowing raw lineitem partitioned by the 3-way returnflag enum
-    (O(corpus/3) rows per reducer): over distinct (flag, value) rows,
-    dense_rank = the per-group position of the value, and
-    rank = (running count of rows at prior values) + 1 = cw − c + 1 —
-    both from one grouped_order_stats pass; the map-side groupBy also
-    replaces the old post-window DISTINCT."""
+    Both ranks come FROM the distinct-value table rather than a window
+    over raw lineitem (the twin's form, ~2x slower at sf0.1): over
+    distinct (flag, value) rows, dense_rank = the per-group position of
+    the value, and rank = (running count of rows at prior values) + 1 =
+    cw − c + 1 — one window over the collapsed table; the map-side
+    groupBy also replaces the post-window DISTINCT."""
     li = load_table(spark, sf_dir, "lineitem")
     d = li.groupBy("l_returnflag", "l_quantity").agg(F.count(F.lit(1)).alias("c"))
-    g = grouped_order_stats(
-        d, ["l_returnflag"], ["l_quantity"], rn_col="drnk", cum_cols={"c": "cw"}
-    )
-    return g.select(
+    w = Window.partitionBy("l_returnflag").orderBy(F.col("l_quantity").asc_nulls_last())
+    return d.select(
         "l_returnflag",
         "l_quantity",
-        (F.col("cw") - F.col("c") + 1).alias("rnk"),
-        "drnk",
+        (F.sum("c").over(w) - F.col("c") + 1).alias("rnk"),
+        F.row_number().over(w).cast("long").alias("drnk"),
     )
 
 
@@ -5322,7 +5257,14 @@ def q_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = li.groupBy("l_returnflag", "l_extendedprice").agg(
         F.count(F.lit(1)).alias("c")
     )
-    dist = _grouped_cdf(counts, "l_returnflag", "l_extendedprice", "c", "cum", "n")
+    # percentile_disc skips NULL values: NULLs sort last and stay out of n
+    price = F.col("l_extendedprice")
+    grp = Window.partitionBy("l_returnflag")
+    dist = counts.select(
+        "*",
+        F.sum("c").over(grp.orderBy(price.asc_nulls_last())).alias("cum"),
+        F.sum(F.when(price.isNotNull(), F.col("c"))).over(grp).alias("n"),
+    )
     fences = dist.groupBy("l_returnflag").agg(
         F.min(
             F.when(F.col("cum") * 4 >= F.col("n"), F.col("l_extendedprice"))
@@ -5359,7 +5301,7 @@ def q_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+_sql_q(
     "q_ntile_quartiles",
     f"""
     WITH t AS (
@@ -5372,39 +5314,6 @@ def q_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t GROUP BY 1
     """,
 )
-def q_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile(4) equi-height bucketing with per-bucket profile. ntile
-    assigns by row position, so ties MUST be broken by a total order —
-    (o_totalprice, o_orderkey) — or the bucket boundaries are
-    run-dependent; this key pins that discipline. Bucket totals use the
-    exact decimal accumulator. Scale note (round-8 rewrite): Spark's
-    unpartitioned ``ntile(4) OVER (ORDER BY ...)`` plans as
-    ``Exchange SinglePartition -> Window`` — ONE reducer sorts every
-    order row. This computes the identical buckets from the two-pass
-    global rank (global_order_stats: range exchange + per-range offsets)
-    and re-derives ntile's remainder rule explicitly: with n rows and
-    k=4 buckets, the first ``n mod k`` buckets hold ``n div k + 1`` rows
-    — the CASE below is that rule, lazily guarded so the small-n branch
-    never divides by zero."""
-    orders = load_table(spark, sf_dir, "orders")
-    t = global_order_stats(
-        orders.select("o_totalprice", "o_orderkey"),
-        ["o_totalprice", "o_orderkey"],
-        rn_col="rn",
-        n_col="n",
-    )
-    # ntile(k): q = n div k, r = n mod k; first r buckets take q+1 rows.
-    quartile = F.expr(
-        "CASE WHEN rn <= (n div 4 + 1) * (n % 4) "
-        "THEN (rn - 1) div (n div 4 + 1) + 1 "
-        "ELSE n % 4 + (rn - (n div 4 + 1) * (n % 4) - 1) div (n div 4) + 1 END"
-    ).cast("int")
-    return t.groupBy(quartile.alias("quartile")).agg(
-        F.count("*").alias("n"),
-        F.min("o_totalprice").alias("lo"),
-        F.max("o_totalprice").alias("hi"),
-        money_sum(F.col("o_totalprice")).alias("bucket_total"),
-    )
 
 
 @_q(
@@ -6631,7 +6540,7 @@ def q_sql_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
 
 
-@_q(
+_sql_q(
     "q_sql_q15",
     f"""
     WITH r AS (
@@ -6645,31 +6554,6 @@ def q_sql_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE total_rev = mx
     """,
 )
-def q_sql_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 top supplier: the supplier(s) achieving the maximum
-    quarterly revenue — the view + scalar-subquery formulation
-    re-expressed as a broadcast scalar max joined back against the
-    per-supplier aggregate (round-8 rewrite: the empty-partition window
-    max was an Exchange SinglePartition over every supplier row; the
-    scalar aggregate is partial+final and the filter is map-side),
-    never re-scanning lineitem. Ties all surface (no arbitrary pick),
-    and revenue is exact-cent-rounded so the equality is well-defined
-    cross-engine."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
-    )
-    r = li.groupBy("l_suppkey").agg(
-        money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-            "total_rev"
-        )
-    )
-    mx = r.agg(F.max("total_rev").alias("mx"))
-    return (
-        r.crossJoin(F.broadcast(mx))
-        .where(F.col("total_rev") == F.col("mx"))
-        .select("l_suppkey", "total_rev")
-    )
 
 
 _sql_q(
@@ -8106,7 +7990,7 @@ def q_agg_window_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+_sql_q(
     "q_ks_test",
     """
     WITH tagged AS (
@@ -8120,9 +8004,9 @@ def q_agg_window_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM tagged GROUP BY v
     ),
     cum AS (
-      SELECT SUM(ca) OVER (ORDER BY v
+      SELECT SUM(ca) OVER (ORDER BY v NULLS LAST
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_a,
-             SUM(cb) OVER (ORDER BY v
+             SUM(cb) OVER (ORDER BY v NULLS LAST
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_b,
              SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
       FROM per_value
@@ -8134,48 +8018,6 @@ def q_agg_window_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cum
     """,
 )
-def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Kolmogorov-Smirnov statistic (returned-vs-kept price
-    distributions) — the distribution-drift gate a data pipeline runs
-    between ingestion batches. D = max|CDF_a − CDF_b| evaluated in EXACT
-    cross-multiplied integer form |cum_a·n_b − cum_b·n_a| (max ~3.6×10¹¹,
-    inside int64) — no per-step float CDFs to drift; the one double
-    division happens once on the final maxima. Plan: groupBy distinct
-    value (map-side collapse), then BOTH cumulative CDFs in one
-    global_order_stats pass over the distinct values (round-8 rewrite —
-    two-pass running sums instead of a single-reducer window, since the
-    distinct-price table grows with the corpus), totals as a broadcast
-    scalar, one max-aggregate."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_returnflag").isin("R", "N")
-    )
-    tagged = li.select(
-        F.col("l_extendedprice").alias("v"),
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("is_b"),
-    )
-    per_value = tagged.groupBy("v").agg(
-        F.sum(1 - F.col("is_b")).alias("ca"),
-        F.sum("is_b").alias("cb"),
-    )
-    # na/nb folded into the helper's per-range aggregate (tot_sum_cols,
-    # guide §2.4, r13) — the separate totals aggregate re-ran the whole
-    # per-value groupBy (a second fact pass); identical integer sums
-    cum = global_order_stats(
-        per_value,
-        ["v"],
-        cum_cols={"ca": "cum_a", "cb": "cum_b"},
-        tot_sum_cols={"ca": "na", "cb": "nb"},
-    ).select("cum_a", "cum_b", "na", "nb")
-    d_num = F.max(F.abs(F.col("cum_a") * F.col("nb") - F.col("cum_b") * F.col("na")))
-    return cum.agg(
-        d_num.alias("d_num"),
-        F.max("na").alias("n_a"),
-        F.max("nb").alias("n_b"),
-        (
-            d_num.cast("double")
-            / (F.max("na").cast("double") * F.max("nb").cast("double"))
-        ).alias("d_stat"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -8411,7 +8253,7 @@ _sql_q(
 )
 
 
-@_q(
+_sql_q(
     "q_weighted_median",
     """
     WITH vw AS (
@@ -8422,8 +8264,8 @@ _sql_q(
     ),
     c AS (
       SELECT l_returnflag, price_c, w,
-             CAST(SUM(w) OVER (PARTITION BY l_returnflag ORDER BY price_c)
-                  AS BIGINT) AS cw,
+             CAST(SUM(w) OVER (PARTITION BY l_returnflag
+                               ORDER BY price_c NULLS LAST) AS BIGINT) AS cw,
              CAST(SUM(w) OVER (PARTITION BY l_returnflag) AS BIGINT) AS tw
       FROM vw
     )
@@ -8432,50 +8274,6 @@ _sql_q(
     FROM c WHERE 2 * cw >= tw GROUP BY l_returnflag
     """,
 )
-def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted median (lower) of extended price weighted by quantity —
-    the count-based quantile plan extended to weights: collapse to
-    distinct cent-values with exact integer weight sums (the only
-    row-count-scale aggregate), then a running weight sum over the
-    distinct-value table picks the first value where 2·cum ≥ total.
-    No per-group row buffering (the sort-based percentile aggregate's
-    scale hazard) — state is bounded by distinct values, and since
-    round 9 the running weight sum over those distinct values runs
-    through grouped_order_stats (two-pass, range-partitioned on
-    (flag, price)): distinct prices scale with the corpus, so even the
-    distinct-value table must never funnel a whole flag's values through
-    one reducer (round-8 verdict item 1)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    vw = (
-        li.select(
-            "l_returnflag",
-            F.floor(F.col("l_extendedprice") * 100).cast("long").alias("price_c"),
-            F.col("l_quantity").cast("long").alias("q"),
-        )
-        .groupBy("l_returnflag", "price_c")
-        .agg(F.sum("q").alias("w"))
-    )
-    # tw folded into the helper's per-(range, group) aggregate
-    # (grp_sum_cols, guide §2.4): the previous separate
-    # vw.groupBy(flag).sum re-ran the whole distinct-value aggregate —
-    # a second fact-table pass (r13, the same fold r12 applied to the
-    # _grouped_cdf family; identical integer totals, interleaved A/B
-    # min 2.85 s → 2.20 s)
-    c = grouped_order_stats(
-        vw,
-        ["l_returnflag"],
-        ["price_c"],
-        cum_cols={"w": "cw"},
-        grp_sum_cols={"w": "tw"},
-    )
-    return (
-        c.filter(2 * F.col("cw") >= F.col("tw"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.min("tw").alias("total_weight"),
-            (F.min("price_c").cast("double") / 100).alias("weighted_median_price"),
-        )
-    )
 
 
 @_q(
@@ -8490,11 +8288,16 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
              2 * rank() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice)
                + count(*) OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice
                                 RANGE BETWEEN CURRENT ROW AND CURRENT ROW)
-               - 1 AS ry2
+               - 1 AS ry2,
+             count(*) OVER (PARTITION BY l_returnflag) AS m
       FROM lineitem
       WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
     ),
-    sc AS (SELECT l_returnflag, rx2 * 1e-7 AS x, ry2 * 1e-7 AS y FROM r),
+    sc AS (
+      SELECT l_returnflag, (rx2 - m - 1) / (2 * m) AS x,
+             (ry2 - m - 1) / (2 * m) AS y
+      FROM r
+    ),
     s AS (
       SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
              {_msum6('x')} AS sx, {_msum6('y')} AS sy,
@@ -8512,100 +8315,50 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation (average-tie convention) — Pearson on
     ranks, kept cross-engine exact by integerizing the tie-averaged rank:
-    2·avg_rank = 2·rank() + |peers| − 1 is always an integer. Round 9
-    replaces the enum-partitioned rank window (each reducer sorted
-    ~corpus/3 raw rows — the round-8 scale-killer class) with rank MAPS
-    over the distinct-value tables: groupBy (flag, value) collapses the
-    fact map-side, grouped_order_stats computes the inclusive running
-    count cw two-pass/range-partitioned, and the doubled tie-averaged
-    rank of every row holding value v is the constant
-    2·rank(v) + c(v) − 1 = 2·cw(v) − c(v) + 1 — joined back to the fact
-    on the (flag, value) key (a co-partitioned shuffle, never a window
-    over raw rows). Both rank maps (quantity and price) ride ONE
-    grouped_order_stats pass: the two distinct-value tables union under
-    a _side tag and group by (_side, flag), so the helper's fixed
-    two-pass cost (range exchange + checkpoint) is paid once, not
-    twice. Doubled ranks then run the q_corr_exact recipe:
-    pre-scale ×1e-7 so decimal(38,6) moments stay below 2^53, exact
-    moment accumulation, one identically-written IEEE combination.
-    Spearman is shift/scale-invariant, so doubling leaves rho unchanged.
+    2·avg_rank = 2·rank() + |peers| − 1 is always an integer. Each side's
+    rank is a MAP over its distinct (flag, value) table: groupBy collapses
+    the fact map-side, one running-count window gives cw, and every row
+    holding value v has the doubled rank 2·cw(v) − c(v) + 1, joined back
+    to the fact on (flag, value). The twin's rank windows over raw
+    lineitem ran 1.4–2.1× slower at sf1 and sf3. Each doubled rank is
+    centered and normalized, x = (r2 − n − 1) / 2n in [−½, ½] (Spearman
+    is shift/scale-invariant, so rho is unchanged): the moment terms are
+    O(1) whatever n is, so the q_corr_exact recipe (exact decimal(38,10)
+    accumulation, scale-6 sums far below 2^53, one identically-written
+    IEEE combination) keeps its precision at every size, and mirrored
+    ranks give x and y of opposite sign bit for bit, so a perfectly
+    (anti-)monotone pair gives rho = ±1 exactly.
 
-    r13 (guide §2.3): only the CROSS moment sxy needs the row-level
-    pairing of x and y, so it alone is accumulated over the joined fact;
-    the four single-side moments (sx, sxx, sy, syy) and n come straight
-    off the rank map, duplicate-weighted by the tie count _c via
-    ``weighted_exact_sum`` (bit-identical by decimal distributivity —
-    asserted at sf0.01 + sf0.1 and property-tested). Interleaved A/B:
-    min 4.43 s → 3.61 s.
-
-    Only complete pairs count: a row with a NULL quantity or price is
-    dropped before ranking, as ``corr`` drops it, so both rank maps, the
-    side moments and the joined pairs cover the same rows."""
+    Only the CROSS moment sxy needs the row-level pairing of x and y; the
+    single-side moments come straight off each rank map, weighted by the
+    tie count ``_c`` via ``weighted_exact_sum`` (bit-identical by decimal
+    distributivity). Only complete pairs count: a row with a NULL quantity
+    or price is dropped before ranking, as ``corr`` drops it."""
     li = load_table(spark, sf_dir, "lineitem")
     base = li.select("l_returnflag", "l_quantity", "l_extendedprice").filter(
         F.col("l_quantity").isNotNull() & F.col("l_extendedprice").isNotNull()
     )
 
-    def _dist(value_col: str, side: int) -> DataFrame:
-        return (
-            base.groupBy("l_returnflag", value_col)
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .select(
-                F.lit(side).alias("_side"),
-                "l_returnflag",
-                F.col(value_col).alias("_v"),
-                "_c",
-            )
+    def _rank_map(
+        value_col: str, x: str, s1: str, s2: str
+    ) -> tuple[DataFrame, DataFrame]:
+        d = base.groupBy("l_returnflag", value_col).agg(F.count(F.lit(1)).alias("_c"))
+        grp = Window.partitionBy("l_returnflag")
+        r2 = 2 * F.sum("_c").over(grp.orderBy(value_col)) - F.col("_c") + 1
+        n = F.sum("_c").over(grp)
+        m = d.select("l_returnflag", value_col, "_c", ((r2 - n - 1) / (2 * n)).alias(x))
+        mom = m.groupBy("l_returnflag").agg(
+            weighted_exact_sum(F.col("_c"), F.col(x), 6).alias(s1),
+            weighted_exact_sum(F.col("_c"), F.col(x) * F.col(x), 6).alias(s2),
         )
+        return m.drop("_c"), mom
 
-    g = grouped_order_stats(
-        _dist("l_quantity", 0).unionByName(_dist("l_extendedprice", 1)),
-        ["_side", "l_returnflag"],
-        ["_v"],
-        cum_cols={"_c": "_cw"},
-    )
-    r2 = 2 * F.col("_cw") - F.col("_c") + 1
-    # multiple consumers (the two map filters + the two side-moment
-    # aggregates) would otherwise re-execute the helper's whole
-    # post-checkpoint pipeline once each — pin the small rank map
-    # (one row per distinct value) instead
-    g = g.select(
-        "_side", "l_returnflag", "_v", "_c", r2.alias("_r2")
-    ).localCheckpoint(eager=False)
-
-    def _side_moments(side: int, s1: str, s2: str, n_name: str) -> DataFrame:
-        x = F.col("_r2") * F.lit(1e-7)
-        return (
-            g.filter(F.col("_side") == side)
-            .groupBy("l_returnflag")
-            .agg(
-                F.sum("_c").alias(n_name),
-                weighted_exact_sum(F.col("_c"), x, 6).alias(s1),
-                weighted_exact_sum(F.col("_c"), x * x, 6).alias(s2),
-            )
-        )
-
-    mq = _side_moments(0, "sx", "sxx", "_nq")
-    pmom = _side_moments(1, "sy", "syy", "_np")
-    qmap = g.filter(F.col("_side") == 0).select(
-        "l_returnflag", F.col("_v").alias("l_quantity"), F.col("_r2").alias("rx2")
-    )
-    pmap = g.filter(F.col("_side") == 1).select(
-        "l_returnflag",
-        F.col("_v").alias("l_extendedprice"),
-        F.col("_r2").alias("ry2"),
-    )
-    # no broadcast hints: the rank maps scale with distinct values
-    # (corpus-unbounded); the joins co-partition on their own grouping
-    # keys and AQE still broadcasts at test scale where they are tiny
-    r = (
-        base.join(qmap, ["l_returnflag", "l_quantity"])
-        .join(pmap, ["l_returnflag", "l_extendedprice"])
-        .select(
-            "l_returnflag",
-            (F.col("rx2") * F.lit(1e-7)).alias("x"),
-            (F.col("ry2") * F.lit(1e-7)).alias("y"),
-        )
+    qmap, mq = _rank_map("l_quantity", "x", "sx", "sxx")
+    pmap, pmom = _rank_map("l_extendedprice", "y", "sy", "syy")
+    # no broadcast hints on the rank maps: they scale with distinct
+    # values; the per-flag moment frames are 3 rows each
+    r = base.join(qmap, ["l_returnflag", "l_quantity"]).join(
+        pmap, ["l_returnflag", "l_extendedprice"]
     )
     s = (
         r.groupBy("l_returnflag")
@@ -8613,9 +8366,8 @@ def q_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             exact_sum(F.col("x") * F.col("y"), 6).alias("sxy"),
         )
-        # per-flag scalar frames (3 rows each)
-        .join(F.broadcast(mq.drop("_nq")), "l_returnflag")
-        .join(F.broadcast(pmom.drop("_np")), "l_returnflag")
+        .join(F.broadcast(mq), "l_returnflag")
+        .join(F.broadcast(pmom), "l_returnflag")
     )
     nd = F.col("n").cast("double")
     rho = (nd * F.col("sxy") - F.col("sx") * F.col("sy")) / F.sqrt(
@@ -8661,14 +8413,12 @@ def q_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully integer-exact: milli-unit quantization, the doubled
     tie-averaged rank, and U reported in doubled units (u1_x2/u2_x2) so
     tie-induced half-steps never touch IEEE floats. Identity check
-    u1+u2 = n1·n2 holds by construction. Round 9 removes the 7-way
-    weekday-partitioned rank window over raw events (O(corpus/7) rows
-    per reducer): rank sums only need PER-VALUE counts, so groupBy
-    (weekday, v) collapses the fact map-side into per-group click/view
-    counts, grouped_order_stats gives the running total count cw
-    two-pass, the doubled tie-averaged rank of value v is
-    2·cw − (c1+c2) + 1, and rsum1_x2 = Σ c1(v)·r2(v) — no join back to
-    raw rows at all."""
+    u1+u2 = n1·n2 holds by construction. Rank sums only need PER-VALUE
+    counts, so groupBy (weekday, v) collapses the fact map-side into
+    per-group click/view counts, a window over that table gives the
+    running total count cw, the doubled tie-averaged rank of value v is
+    2·cw − (c1+c2) + 1, and rsum1_x2 = Σ c1(v)·r2(v) — no window over
+    raw events and no join back to them."""
     ev = load_table(spark, sf_dir, "events")
     pts = ev.filter(F.col("event_type").isin("click", "view")).select(
         (F.expr("weekday(ts)") + 1).cast("long").alias("weekday"),
@@ -8679,11 +8429,15 @@ def q_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("g") == "click", 1).otherwise(0)).alias("c1"),
         F.sum(F.when(F.col("g") == "view", 1).otherwise(0)).alias("c2"),
     )
-    g = grouped_order_stats(
-        cg.withColumn("c", F.col("c1") + F.col("c2")),
-        ["weekday"],
-        ["v"],
-        cum_cols={"c": "cw"},
+    c = F.col("c1") + F.col("c2")
+    g = cg.select(
+        "c1",
+        "c2",
+        "weekday",
+        c.alias("c"),
+        F.sum(c)
+        .over(Window.partitionBy("weekday").orderBy(F.col("v").asc_nulls_last()))
+        .alias("cw"),
     )
     r2 = 2 * F.col("cw") - F.col("c") + 1
     s = g.groupBy("weekday").agg(
@@ -8912,14 +8666,10 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature distributions before training). Same doubled tie-averaged
     rank as q_spearman_rho; the quantile (avg_rank − ½)/n is emitted in
     exact integer ppm ((r2−1)·5·10⁵ div n), so the output is engine- and
-    partitioning-independent. Round 9 replaces the ~5-way
-    event_type-partitioned rank window over raw events (O(corpus/5) rows
-    per reducer) with a rank map over the distinct (event_type, v)
-    table: grouped_order_stats computes the running count two-pass,
-    r2(v) = 2·cw − c + 1 is constant per value, n comes from the
-    helper's broadcast per-group totals, and rows join the map back on
-    the (event_type, v) key — a co-partitioned shuffle, never a window
-    over raw rows."""
+    partitioning-independent. The rank map is built over the distinct
+    (event_type, v) table, not raw events: one window gives the running
+    count cw and the group total n, r2(v) = 2·cw − c + 1 is constant per
+    value, and rows join the map back on the (event_type, v) key."""
     ev = load_table(spark, sf_dir, "events")
     pts = ev.select(
         "event_id",
@@ -8927,23 +8677,20 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 1000).cast("long").alias("v"),
     )
     d = pts.groupBy("event_type", "v").agg(F.count(F.lit(1)).alias("c"))
-    # n = raw rows per event_type (Σ c), folded into the helper's
-    # per-(range, group) aggregate instead of a second aggregate over d
-    # (grp_sum_cols, guide §2.4 — the r12 _grouped_cdf fold, applied here
-    # in r13; identical integer totals, broadcast back by the helper)
-    g = grouped_order_stats(
-        d, ["event_type"], ["v"], cum_cols={"c": "cw"}, grp_sum_cols={"c": "n"}
-    )
+    grp = Window.partitionBy("event_type")
     # distinct (event_type, v) map scales with the value domain — no
     # broadcast hint; the join co-partitions and AQE broadcasts when
     # the map is actually small
-    rmap = g.select(
-        "event_type",
-        "v",
-        (2 * F.col("cw") - F.col("c") + 1).alias("r2"),
-        "n",
+    rmap = d.select(
+        F.col("event_type").alias("_et"),
+        F.col("v").alias("_v"),
+        (2 * F.sum("c").over(grp.orderBy(F.col("v").asc_nulls_last())) - F.col("c") + 1)
+        .alias("r2"),
+        F.sum("c").over(grp).alias("n"),
     )
-    return pts.join(rmap, ["event_type", "v"]).select(
+    # NULL readings rank as one last tie group, so they join null-safe
+    on = (F.col("event_type") == F.col("_et")) & F.col("v").eqNullSafe(F.col("_v"))
+    return pts.join(rmap, on).select(
         "event_id",
         "event_type",
         F.expr("((r2 - 1) * 500000) div n").alias("q_ppm"),
@@ -10426,18 +10173,17 @@ def q_partition_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent values map-side, one cumulative window over the distinct-value
     table, then pid = (rows_below·P) div n + 1 in pure integer arithmetic
     — equal values never straddle a boundary, and every partition's row
-    count + upper bound is reproducible under any accumulation order.
-    Round-8 rewrite: the cumulative pass is global_order_stats' two-pass
-    running sum (exclusive = inclusive − own count) — fitting, since
-    this key EXISTS to plan the very range exchange the helper uses."""
+    count + upper bound is reproducible under any accumulation order
+    (exclusive running sum = inclusive − own count)."""
     orders = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     v = orders.groupBy(cents.alias("cents")).agg(F.count(F.lit(1)).alias("c"))
-    # n folded into the helper's per-range aggregate (tot_sum_cols, §2.4,
-    # r13) instead of a second aggregate pass over v
-    w = global_order_stats(
-        v, ["cents"], cum_cols={"c": "cum_inc"}, tot_sum_cols={"c": "n"}
-    ).select("cents", "c", (F.col("cum_inc") - F.col("c")).alias("cum_lt"), "n")
+    w = v.select(
+        "cents",
+        "c",
+        (F.sum("c").over(Window.orderBy("cents")) - F.col("c")).alias("cum_lt"),
+        F.sum("c").over(Window.partitionBy()).alias("n"),
+    )
     return (
         w.select("cents", "c", F.expr("cum_lt * 8 div n + 1").alias("partition_id"))
         .groupBy("partition_id")
@@ -10939,7 +10685,7 @@ def q_lambda_array_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+_sql_q(
     "q_auc_roc",
     """
     WITH x AS (
@@ -10967,46 +10713,6 @@ def q_lambda_array_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s
     """,
 )
-def q_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact AUC-ROC with average-rank tie handling, via the
-    AUC = U/(n₁·n₀) identity with the Mann-Whitney U statistic
-    (q_mann_whitney_u's doubled-rank integerization: 2·avg_rank =
-    2·rank + peers − 1, accumulated per DISTINCT score so no row-level
-    rank window is needed). Everything up to the final single division is
-    int64 — the sort-free, tie-correct way to evaluate a ranking model on
-    10^11 scored rows: one groupBy on the score value, then the
-    cumulative count over distinct scores via global_order_stats'
-    two-pass running sum (round-8 rewrite — the previous
-    ORDER BY window pushed every distinct score through one reducer;
-    this range-partitions the distinct-score frame and composes
-    per-range partial sums with broadcast offsets)."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    x = ev.select(
-        F.round(F.col("value") * 100, 0).cast("long").alias("v"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-    )
-    dv = x.groupBy("v").agg(
-        F.count(F.lit(1)).alias("c"), F.sum("y").alias("pos_c")
-    )
-    r = global_order_stats(dv, ["v"], cum_cols={"c": "cum"}).select(
-        "v", "c", "pos_c", "cum"
-    )
-    s = r.agg(
-        F.sum(
-            F.col("pos_c") * (2 * (F.col("cum") - F.col("c")) + F.col("c") + 1)
-        ).alias("s2"),
-        F.sum("pos_c").alias("n1"),
-        F.sum(F.col("c") - F.col("pos_c")).alias("n0"),
-    )
-    u2 = F.col("s2") - F.col("n1") * (F.col("n1") + 1)
-    return s.select(
-        F.col("n1").cast("long").alias("n_pos"),
-        F.col("n0").cast("long").alias("n_neg"),
-        u2.cast("long").alias("u_doubled"),
-        (
-            u2.cast("double") / (2 * F.col("n1") * F.col("n0")).cast("double")
-        ).alias("auc"),
-    )
 
 
 @_q(
@@ -11350,7 +11056,7 @@ def q_array_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+_sql_q(
     "q_id_gap_ranges",
     """
     WITH k AS (SELECT DISTINCT l_orderkey AS id FROM lineitem),
@@ -11363,35 +11069,6 @@ def q_array_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g WHERE nxt - id > 1
     """,
 )
-def q_id_gap_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Missing-id range detection over a sparse key domain (the orderkeys
-    referenced by lineitem — a subset of the order sequence, so holes
-    exist by construction): each hole becomes one (gap_start, gap_end,
-    gap_len) row. No sequence table is ever materialized — O(distinct
-    keys), not O(key domain), at 10^12 ids. Scale shape (round-8 rewrite
-    of the single-reducer lead() window): gaps-and-islands on the
-    two-pass global rank — island_id = id − global_rank is constant
-    exactly within each contiguous run, islands collapse to (lo, hi)
-    rows, and consecutive islands pair by an EQUI-join on the
-    rank-arithmetic identity next_island.first_rank =
-    this_island.last_rank + 1 (first_rank = lo − island_id) — every
-    operator is a hash shuffle or a grouped aggregate."""
-    li = load_table(spark, sf_dir, "lineitem")
-    k = li.select(F.col("l_orderkey").alias("id")).distinct()
-    g = global_order_stats(k, ["id"], rn_col="rn")
-    isl = g.groupBy((F.col("id") - F.col("rn")).alias("isl")).agg(
-        F.min("id").alias("lo"), F.max("id").alias("hi")
-    )
-    a = isl.select("isl", "hi", (F.col("hi") - F.col("isl") + 1).alias("nxt_rank"))
-    nxt = isl.select(
-        (F.col("lo") - F.col("isl")).alias("first_rank"),
-        F.col("lo").alias("nxt_lo"),
-    )
-    return a.join(nxt, a.nxt_rank == nxt.first_rank).select(
-        (F.col("hi") + 1).alias("gap_start"),
-        (F.col("nxt_lo") - 1).alias("gap_end"),
-        (F.col("nxt_lo") - F.col("hi") - 1).alias("gap_len"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -11485,7 +11162,7 @@ def q_price_volume_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+_sql_q(
     "q_abc_classes",
     """
     WITH p AS (
@@ -11514,47 +11191,6 @@ def q_price_volume_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cls GROUP BY 1
     """,
 )
-def q_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ABC / Pareto inventory classification: parts ranked by revenue,
-    class A = the prefix holding ≤80% of cumulative revenue, B to 95%,
-    C the tail — thresholds applied in cross-multiplied integer form
-    (cum·5 ≤ total·4) with a (cents DESC, partkey) total order so ties
-    can't straddle classes nondeterministically. The cumulative revenue
-    runs over the part aggregate via global_order_stats' two-pass
-    running sum (round-8 rewrite — the part table itself scales with the
-    corpus, so the previous unpartitioned window was a single-reducer
-    sort over every part); the total is a broadcast scalar;
-    revenue_share is one integer→double division."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = li.groupBy("l_partkey").agg(
-        F.sum(
-            F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0)
-            .cast("long")
-        ).alias("cents")
-    )
-    # total folded into the helper's per-range aggregate (tot_sum_cols,
-    # §2.4, r13) instead of a second aggregate pass over p
-    c = global_order_stats(
-        p,
-        [F.col("cents").desc(), F.col("l_partkey")],
-        cum_cols={"cents": "cum"},
-        tot_sum_cols={"cents": "total"},
-    ).select("cents", "cum", "total")
-    cls = c.select(
-        F.when(F.col("cum") * 5 <= F.col("total") * 4, "A")
-        .when(F.col("cum") * 20 <= F.col("total") * 19, "B")
-        .otherwise("C")
-        .alias("abc_class"),
-        "cents",
-        "total",
-    )
-    return cls.groupBy("abc_class").agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.sum("cents").alias("cents"),
-        (F.sum("cents").cast("double") / F.max("total").cast("double")).alias(
-            "revenue_share"
-        ),
-    )
 
 
 @_q(
@@ -12188,48 +11824,40 @@ def q_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break), positives counted per decile with cumulative capture
     rate. A well-ranked model front-loads positives; cum_capture is the
     one float, a single integer division per row of a 10-row table.
-    Scale shape (round-8 rewrite): the global rank comes from
-    global_order_stats (range exchange + per-range offsets — no
-    single-reducer WindowExec over the scored rows; rank == row_number
-    here because the event_id tie-break makes the order total), and the
-    10-row decile cumulatives are a broadcast triangular self-join
-    instead of an ORDER BY window — no single-partition operator
-    anywhere in the plan."""
+    The global rank (rank == row_number: the event_id tie-break makes
+    the order total) is split in two: a running count over the DISTINCT
+    scores gives each score's rows-before offset and n, and row_number
+    within a score partition adds the event_id position, so no window
+    sees more than the distinct scores or one score's ties (one
+    row_number window over all scored rows ran 2.5× slower at sf3 on 4
+    cores). The decile cumulatives are running sums over the 10-row
+    decile table."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     x = ev.select(
         F.round(F.col("value") * 100, 0).cast("long").alias("v"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
         "event_id",
     )
-    # tot_pos (Σy over all rows ≡ Σpos over deciles) folded into the
-    # helper's per-range aggregate (tot_sum_cols, §2.4, r13) and carried
-    # through the decile groupBy as a constant grouping column — the
-    # separate d.agg(sum) re-ran the helper's whole post-checkpoint
-    # pipeline a third time
-    ranked = global_order_stats(
-        x,
-        [F.col("v").desc(), F.col("event_id")],
-        rn_col="rk",
-        n_col="n",
-        tot_sum_cols={"y": "tot_pos"},
-    ).select("y", F.expr("(rk - 1) * 10 div n + 1").alias("decile"), "tot_pos")
-    d = ranked.groupBy("decile", "tot_pos").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos")
+    scores = x.groupBy("v").agg(F.count(F.lit(1)).alias("c")).select(
+        "v",
+        (F.sum("c").over(Window.orderBy(F.col("v").desc())) - F.col("c")).alias("before"),
+        F.sum("c").over(Window.partitionBy()).alias("n"),
     )
-    b = d.select(F.col("decile").alias("dec_b"), F.col("pos").alias("pos_b"))
-    cum = (
-        d.join(F.broadcast(b), F.col("dec_b") <= F.col("decile"))
-        .groupBy("decile", "tot_pos", "n", "pos")
-        .agg(F.sum("pos_b").alias("cum_pos"))
+    rk = F.col("before") + F.row_number().over(Window.partitionBy("v").orderBy("event_id"))
+    ranked = (
+        x.join(scores, "v")
+        .select("y", rk.alias("rk"), "n")
+        .select("y", F.expr("(rk - 1) * 10 div n + 1").alias("decile"))
     )
-    return cum.select(
+    d = ranked.groupBy("decile").agg(F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos"))
+    cum_pos = F.sum("pos").over(Window.orderBy("decile"))
+    tot_pos = F.sum("pos").over(Window.partitionBy())
+    return d.select(
         "decile",
         "n",
         F.col("pos").cast("long").alias("n_pos"),
-        F.col("cum_pos").cast("long").alias("cum_pos"),
-        (
-            F.col("cum_pos").cast("double") / F.col("tot_pos").cast("double")
-        ).alias("cum_capture"),
+        cum_pos.cast("long").alias("cum_pos"),
+        (cum_pos.cast("double") / tot_pos.cast("double")).alias("cum_capture"),
     )
 
 
@@ -15707,7 +15335,7 @@ def q_decayed_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+_sql_q(
     "q_decile_spread",
     """
     WITH c AS (
@@ -15733,34 +15361,6 @@ def q_decayed_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM q
     """,
 )
-def q_decile_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P90/P10 DECILE SPREAD per group — the dispersion/inequality ratio
-    (compensation analytics, latency SLOs): both endpoints come from the
-    count-based discrete-percentile plan (distinct values collapse
-    map-side, integer CDF rule 10·cum ≥ k·n), and the spread is ONE
-    division of two exact data values. No sort-based percentile
-    buffering anywhere."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    c = ev.groupBy(
-        "event_type", F.round(F.col("value") * 100, 0).cast("long").alias("v")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    cum = _grouped_cdf(c, "event_type", "v", "n", "cumn", "tot")
-    q = cum.groupBy("event_type").agg(
-        F.min(F.when(F.col("cumn") * 10 >= F.col("tot"), F.col("v"))).alias(
-            "p10"
-        ),
-        F.min(
-            F.when(F.col("cumn") * 10 >= F.col("tot") * 9, F.col("v"))
-        ).alias("p90"),
-    )
-    return q.select(
-        "event_type",
-        F.col("p10").cast("long").alias("p10_cents"),
-        F.col("p90").cast("long").alias("p90_cents"),
-        (F.col("p90").cast("double") / F.col("p10").cast("double")).alias(
-            "spread_ratio"
-        ),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -17786,19 +17386,14 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, label = purchase events. Determinism recipe: scores
     quantized to integer micros with FLOOR, bins assigned rank-based
     ((rn−1)·k div n + 1 — the engine-stable ntile), aggregates are
-    integer sums with exactly two final divisions. Scale shape (round-8
-    rewrite): the global rank is global_order_stats' two-pass form —
-    range exchange + per-range offsets + per-range local window — so no
-    single-reducer WindowExec ever sees the full scored population."""
+    integer sums with exactly two final divisions."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     s = ev.select(
         F.floor(F.col("value") * 2000).cast("long").alias("score_micro"),
         (F.col("event_type") == "purchase").cast("int").alias("label"),
         "event_id",
     )
-    rk = global_order_stats(
-        s, ["score_micro", "event_id"], rn_col="rn", n_col="n"
-    )
+    rk = _ranked(s, "score_micro", "event_id")
     binc = F.expr("((rn - 1) * 10) div n + 1")
     return (
         rk.groupBy(binc.cast("int").alias("bin"))
@@ -18859,7 +18454,12 @@ def q_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = ev.groupBy(
         (F.col("user_id") % 2).cast("int").alias("grp"), "value"
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    cum = _grouped_cdf(v, "grp", "value", "c", "cum", "n")
+    grp = Window.partitionBy("grp")
+    cum = v.select(
+        "*",
+        F.sum("c").over(grp.orderBy("value")).alias("cum"),
+        F.sum("c").over(grp).alias("n"),
+    )
     pgrid = spark.createDataFrame([(25,), (50,), (75,), (90,)], "p int")
     hit = (
         cum.join(F.broadcast(pgrid), F.col("cum") * 100 >= F.col("p") * F.col("n"))
@@ -19262,10 +18862,8 @@ def q_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate — where the incremental effect concentrates. Deciles are
     rank-based ((rn−1)·10 div n, total-order tie-break), counts are
     integers, and the uplift is two divisions subtracted in one fixed
-    expression. Plan: one aggregate to user grain, then the two-pass
-    global rank (global_order_stats — range exchange + per-range
-    offsets, round-8 rewrite of the single-reducer window), one decile
-    aggregate."""
+    expression. Plan: one aggregate to user grain, then the global rank
+    window over users, one decile aggregate."""
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy(
         "user_id", (F.col("user_id") % 2).cast("int").alias("grp")
@@ -19279,9 +18877,7 @@ def q_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("conv"),
     )
-    rk = global_order_stats(
-        u, [F.col("score").desc(), F.col("user_id")], rn_col="rn", n_col="n"
-    )
+    rk = _ranked(u, F.col("score").desc(), F.col("user_id"))
     t = F.col("grp") == 1
     return (
         rk.groupBy(F.expr("((rn - 1) * 10) div n + 1").cast("int").alias("decile"))
@@ -20658,19 +20254,16 @@ def q_cost_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     each of ~10 decile-boundary candidate thresholds, integer cost
     fp + 3·fn, optimum flagged by an integer window MIN. The candidate
     grid is rank-derived (decile boundaries with total-order ties), so
-    the sweep is data-adaptive yet deterministic. Plan: one two-pass
-    global-rank pass (global_order_stats — round-8 rewrite of the
-    single-reducer window; boundary scores are tie-invariant, so the
-    non-total (score, label) order is safe) builds the tiny grid, one
+    the sweep is data-adaptive yet deterministic. Plan: one global rank
+    window (boundary scores are tie-invariant, so the non-total
+    (score, label) order is safe) builds the tiny grid, one
     broadcast-grid conditional aggregate builds ALL confusion matrices
     in a single scan; the optimum flag is a broadcast scalar MIN."""
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         F.col("n_chars").alias("score"), (F.col("lang") == "en").cast("int").alias("label")
     )
-    rk = global_order_stats(
-        scored, ["score", "label"], rn_col="rn", n_col="n"
-    )
+    rk = _ranked(scored, "score", "label")
     grid = (
         rk.filter(
             F.expr("(rn - 1) * 10 div n <> rn * 10 div n OR rn = 1")
@@ -20768,14 +20361,13 @@ def q_matched_pairs_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     side (ties prefer the predecessor — a total order both engines
     share). Outcomes are integer micros; the ATT is one fixed
     expression; total match distance rides along as the match-quality
-    diagnostic. Round-8 rewrite: the carries are global_order_stats'
-    two-pass exclusive struct extrema — the last prior control is the
-    MAX of struct(score, user_id, y) over nullable control structs
-    (struct order ≡ the sort order among controls, max skips the
-    treated rows' NULLs, and exclusive == the oracle's inclusive
-    IGNORE-NULLS frame on treated rows because a treated row's own
-    control struct is NULL), the next control the mirrored MIN — no
-    single-reducer window over the user-grain frame."""
+    diagnostic. The carries are exclusive struct extrema over the
+    user-grain frame — the last prior control is the running MAX of
+    struct(score, user_id, y) over nullable control structs (struct
+    order ≡ the sort order among controls, max skips the treated rows'
+    NULLs, and exclusive == the oracle's inclusive IGNORE-NULLS frame on
+    treated rows because a treated row's own control struct is NULL),
+    the next control the mirrored running MIN in descending order."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     u = ev.groupBy(
         "user_id", (F.col("user_id") % 2).cast("int").alias("grp")
@@ -20796,11 +20388,17 @@ def q_matched_pairs_att(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("grp") == 0, F.struct("score", "user_id", "y_micro")
         ),
     )
-    s = global_order_stats(
-        u,
-        ["score", "grp", "user_id"],
-        max_cols_excl={"_ctrl": "_prev"},
-        min_cols_excl_rev={"_ctrl": "_next"},
+    # both carries use a growing frame (running extremum over prior rows);
+    # a ROWS 1 FOLLOWING .. UNBOUNDED FOLLOWING frame is recomputed per
+    # row, quadratic in the number of users
+    order = ["score", "grp", "user_id"]
+    prior = (Window.unboundedPreceding, -1)
+    s = u.select(
+        "*",
+        F.max("_ctrl").over(Window.orderBy(*order).rowsBetween(*prior)).alias("_prev"),
+        F.min("_ctrl")
+        .over(Window.orderBy(*[F.col(c).desc() for c in order]).rowsBetween(*prior))
+        .alias("_next"),
     ).select(
         "*",
         F.col("_prev.score").alias("prev_cs"),
@@ -21715,7 +21313,7 @@ def q_newsvendor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+_sql_q(
     "q_abc_xyz",
     """
     WITH part_rev AS (
@@ -21752,60 +21350,6 @@ def q_newsvendor(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cls GROUP BY 1, 2
     """,
 )
-def q_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ABC-XYZ PLANNING MATRIX — the two-axis inventory segmentation
-    supply planners actually use: ABC = revenue concentration
-    (q_abc_classes' cross-multiplied Pareto cut), XYZ = demand
-    VARIABILITY (coefficient of variation of per-line quantities,
-    classed at cv ≤ 0.25 / ≤ 0.5 / above — compared as the INTEGER
-    cross-multiplication (n·Σq²−(Σq)²)·k ≤ (Σq)², no float cv anywhere).
-    AX items get automated replenishment, CZ items get manual review —
-    the 9-cell census with revenue mass is the planning dashboard. Plan:
-    one lineitem aggregate to parts, then the two-pass running revenue
-    sum over parts (global_order_stats, round-8 rewrite — parts scale
-    with the corpus, so the previous unpartitioned window single-reduced
-    them) with a broadcast scalar total, a 9-row census."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part_rev = li.groupBy("l_partkey").agg(
-        F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("long"))
-        .cast("long")
-        .alias("cents"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("l_quantity").cast("long")).cast("long").alias("sq"),
-        F.sum(F.col("l_quantity").cast("long") * F.col("l_quantity").cast("long"))
-        .cast("long")
-        .alias("sqq"),
-    )
-    # tot folded into the helper's per-range aggregate (tot_sum_cols,
-    # §2.4, r13) instead of a second aggregate pass over part_rev
-    abc = (
-        global_order_stats(
-            part_rev,
-            [F.col("cents").desc(), F.col("l_partkey")],
-            cum_cols={"cents": "cum_raw"},
-            tot_sum_cols={"cents": "tot_raw"},
-        )
-        .withColumn("cum", F.col("cum_raw").cast("long"))
-        .withColumn("tot", F.col("tot_raw").cast("long"))
-        .drop("cum_raw", "tot_raw", "_grn")
-    )
-    var_num = F.col("n") * F.col("sqq") - F.col("sq") * F.col("sq")
-    cls = abc.filter(F.col("n") >= 2).select(
-        "l_partkey",
-        "cents",
-        F.when(F.col("cum") * 5 <= F.col("tot") * 4, "A")
-        .when(F.col("cum") * 20 <= F.col("tot") * 19, "B")
-        .otherwise("C")
-        .alias("abc"),
-        F.when(var_num * 16 <= F.col("sq") * F.col("sq"), "X")
-        .when(var_num * 4 <= F.col("sq") * F.col("sq"), "Y")
-        .otherwise("Z")
-        .alias("xyz"),
-    )
-    return cls.groupBy("abc", "xyz").agg(
-        F.count(F.lit(1)).cast("long").alias("n_parts"),
-        F.sum("cents").cast("long").alias("cents"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -21901,7 +21445,7 @@ _sql_q(
 )
 
 
-@_q(
+_sql_q(
     "q_palma_ratio",
     """
     WITH u AS (
@@ -21923,40 +21467,6 @@ _sql_q(
     FROM rk
     """,
 )
-def q_palma_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PALMA RATIO — the inequality measure that reads directly (top-10%
-    share over bottom-40% share; the Gini compresses exactly the part of
-    the distribution that moves) — here over per-user value mass, the
-    whale-concentration number a marketplace/abuse team tracks next to
-    q_gini and q_hhi. Membership in the decile groups is decided by
-    INTEGER rank arithmetic (rn·10 ≤ n for the top, (n−rn)·10 < 4n for
-    the bottom — total-order tie-break by user), the masses are integer
-    micro sums, the ratio ONE division. Plan: one unit aggregate + the
-    two-pass global rank (global_order_stats, round-8 rewrite of the
-    single-reducer window) + one reduction."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    u = ev.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 1000000).cast("long"))
-        .cast("long")
-        .alias("v")
-    )
-    rk = global_order_stats(
-        u, [F.col("v").desc(), F.col("user_id")], rn_col="rn", n_col="n"
-    )
-    top = F.when(F.col("rn") * 10 <= F.col("n"), F.col("v"))
-    bot = F.when((F.col("n") - F.col("rn")) * 10 < F.col("n") * 4, F.col("v"))
-    return rk.agg(
-        F.max("n").cast("long").alias("n_users"),
-        F.sum(top).cast("long").alias("top10_micro"),
-        F.sum(bot).cast("long").alias("bottom40_micro"),
-    ).select(
-        "n_users",
-        "top10_micro",
-        "bottom40_micro",
-        (
-            F.col("top10_micro").cast("double") / F.col("bottom40_micro")
-        ).alias("palma"),
-    )
 
 
 @_q(
@@ -22112,19 +21622,15 @@ def q_expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-bin float summation order enters the hash). Probabilities are
     integer micros, bins use the engine-stable rank rule, each gap is a
     fixed expression with divisions last. Extends q_calibration_bins
-    from the reliability TABLE to the reliability METRIC. Plan (round-8
-    rewrite): the two-pass global rank (global_order_stats — range
-    exchange + per-range offsets, no single-reducer window) + one
-    aggregate — a percentile-pass shape."""
+    from the reliability TABLE to the reliability METRIC. Plan: the
+    global rank window + one aggregate — a percentile-pass shape."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     s = ev.select(
         F.floor(F.col("value") * 2000).cast("long").alias("p_micro"),
         (F.col("event_type") == "purchase").cast("int").alias("y"),
         "event_id",
     )
-    rk = global_order_stats(
-        s, ["p_micro", "event_id"], rn_col="rn", n_col="n"
-    )
+    rk = _ranked(s, "p_micro", "event_id")
     bins = rk.groupBy(
         F.expr("((rn - 1) * 10) div n + 1").cast("int").alias("bin")
     ).agg(
@@ -22198,10 +21704,8 @@ def q_qini_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum_ct·cum_nc − cum_cc·cum_nt — the sign and ordering carrier),
     the y value is one fixed expression. Extends q_uplift_deciles from
     per-bucket rates to the cumulative targeting-policy view. Plan: one
-    unit aggregate, the two-pass global rank (global_order_stats,
-    round-8 rewrite of the single-reducer window), then the 10-row
-    decile cumulatives via a broadcast triangular self-join — no
-    single-partition operator in the plan."""
+    unit aggregate, the global rank window over users, then the 10-row
+    decile cumulatives via a broadcast triangular self-join."""
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy(
         "user_id", (F.col("user_id") % 2).cast("int").alias("grp")
@@ -22215,9 +21719,7 @@ def q_qini_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("conv"),
     )
-    rk = global_order_stats(
-        u, [F.col("score").desc(), F.col("user_id")], rn_col="rn", n_col="n"
-    )
+    rk = _ranked(u, F.col("score").desc(), F.col("user_id"))
     t = F.col("grp") == 1
     dec = rk.groupBy(
         F.expr("((rn - 1) * 10) div n + 1").cast("int").alias("decile")
@@ -22301,19 +21803,17 @@ def q_risk_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve answers "how much coverage can we keep at ≤X% risk" — the
     abstention-policy question every selective classifier and every
     LLM-routing cascade asks. Counts are integers through the
-    cumulatives; coverage and risk are one division each. Plan (round-8
-    rewrite): the two-pass global rank (global_order_stats) + one
-    aggregate + a broadcast triangular self-join for the 10-row
-    cumulatives — no single-partition operator in the plan."""
+    cumulatives; coverage and risk are one division each. Plan: the
+    global rank window + one decile aggregate + running sums over its
+    10 rows (a self-join of the aggregate would rank the documents
+    twice)."""
     docs = load_table(spark, sf_dir, "documents")
     s = docs.select(
         F.col("n_chars").alias("conf"),
         (F.col("lang") != "en").cast("int").alias("err"),
         "doc_id",
     )
-    rk = global_order_stats(
-        s, [F.col("conf").desc(), F.col("doc_id")], rn_col="rn", n_col="n"
-    )
+    rk = _ranked(s, F.col("conf").desc(), F.col("doc_id"))
     dec = rk.groupBy(
         F.expr("((rn - 1) * 10) div n + 1").cast("int").alias("decile")
     ).agg(
@@ -22321,25 +21821,18 @@ def q_risk_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("err").cast("long").alias("errs"),
         F.max("n").cast("long").alias("n_total"),
     )
-    b = dec.select(
-        F.col("decile").alias("dec_b"),
-        F.col("n_bin").alias("nb_b"),
-        F.col("errs").alias("er_b"),
-    )
-    return (
-        dec.join(F.broadcast(b), F.col("dec_b") <= F.col("decile"))
-        .groupBy("decile", "n_total")
-        .agg(
-            F.sum("nb_b").cast("long").alias("covered"),
-            F.sum("er_b").cast("long").alias("cum_errs"),
-        )
-        .select(
-            "decile",
-            "covered",
-            "cum_errs",
-            (F.col("covered").cast("double") / F.col("n_total")).alias("coverage"),
-            (F.col("cum_errs").cast("double") / F.col("covered")).alias("risk"),
-        )
+    upto = Window.orderBy("decile")
+    return dec.select(
+        "decile",
+        "n_total",
+        F.sum("n_bin").over(upto).cast("long").alias("covered"),
+        F.sum("errs").over(upto).cast("long").alias("cum_errs"),
+    ).select(
+        "decile",
+        "covered",
+        "cum_errs",
+        (F.col("covered").cast("double") / F.col("n_total")).alias("coverage"),
+        (F.col("cum_errs").cast("double") / F.col("covered")).alias("risk"),
     )
 
 
@@ -22373,7 +21866,7 @@ _ROTATION_INPUT_ROUNDS = 12
 # Round 13 pins (r12's pins all driver-sampled green in CORRECTNESS_r12):
 # - the r12 semantics-touched keys the r12 driver sample missed
 #   (r12 verdict item 2): q_try_arith (try_multiply → range guard),
-#   q_ann_ivf (quantizer budget), the _grouped_cdf family except the
+#   q_ann_ivf (quantizer budget), the distinct-value CDF family except the
 #   sampled q_ntile_quartiles, the shingle_frame/minhash users;
 # - every key whose Spark body changed in round 13: q_stream_upsert
 #   (sized_state_store removed), q_spearman_rho (weighted side moments),

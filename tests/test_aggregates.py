@@ -4,9 +4,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.operators.aggregates import (
     count_distinct_by,
-    rollup_by,
     sum_by_dim,
-    windowed_daily,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
@@ -27,19 +25,6 @@ def test_sum_by_dim_matches_global_total(spark, sf_dir):
         F.round(F.sum(F.col("o_totalprice").cast("decimal(38,10)")), 2).cast("double")
     ).collect()[0][0]
     assert abs(total - expected) < 1e-4
-
-
-def test_rollup_has_grand_total(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    out = rollup_by(orders, ["o_orderstatus", "o_orderpriority"], "o_totalprice")
-    grand = out.filter((F.col("g_o_orderstatus") == 1) & (F.col("g_o_orderpriority") == 1))
-    assert grand.count() == 1
-
-
-def test_windowed_daily_counts_sum_to_total(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    daily = windowed_daily(ev, "ts", "value")
-    assert daily.agg(F.sum("n_events")).collect()[0][0] == ev.count()
 
 
 def test_approx_percentile_close_to_exact(spark, sf_dir):

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
     REGISTRY,
-    q_abc_xyz,
     q_haberman_residuals,
     q_newsvendor,
 )
@@ -81,7 +80,7 @@ def test_newsvendor_fractile_is_optimal(spark, sf_dir):
 
 
 def test_abc_xyz_census(spark, sf_dir):
-    rows = q_abc_xyz(spark, sf_dir).collect()
+    rows = REGISTRY["q_abc_xyz"](spark, sf_dir).collect()
     assert {r["abc"] for r in rows} <= {"A", "B", "C"}
     assert {r["xyz"] for r in rows} <= {"X", "Y", "Z"}
     li = load_table(spark, sf_dir, "lineitem")

@@ -11,7 +11,6 @@ from etl_pipeline_project_spark.queries import (
     REGISTRY,
     q_inspection_paradox,
     q_mann_kendall,
-    q_palma_ratio,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
 
@@ -48,7 +47,7 @@ def test_wilson_interval_properties(spark, sf_dir):
 
 
 def test_palma_ratio_masses(spark, sf_dir):
-    r = q_palma_ratio(spark, sf_dir).first()
+    r = REGISTRY["q_palma_ratio"](spark, sf_dir).first()
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     vals = sorted(
         (

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from etl_pipeline_project_spark.queries import (
     REGISTRY,
     q_sql_q13,
-    q_sql_q15,
     q_sql_q22,
     q_sql_q8,
 )
@@ -33,7 +32,7 @@ def test_q13_distribution_covers_all_customers(spark, sf_dir):
 
 
 def test_q15_returns_the_max_only(spark, sf_dir):
-    rows = q_sql_q15(spark, sf_dir).collect()
+    rows = REGISTRY["q_sql_q15"](spark, sf_dir).collect()
     assert len(rows) >= 1
     revs = {r["total_rev"] for r in rows}
     assert len(revs) == 1  # all ties at the max

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_project_spark.queries import q_agg_window_hopping, q_ks_test
+from etl_pipeline_project_spark.queries import REGISTRY, q_agg_window_hopping
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
@@ -26,7 +26,7 @@ def test_hopping_window_starts_are_6h_aligned(spark, sf_dir):
 
 
 def test_ks_stat_bounded(spark, sf_dir):
-    r = q_ks_test(spark, sf_dir).first()
+    r = REGISTRY["q_ks_test"](spark, sf_dir).first()
     assert 0.0 <= r["d_stat"] <= 1.0
     assert r["d_num"] <= r["n_a"] * r["n_b"]
 

@@ -2,17 +2,20 @@
 
 from __future__ import annotations
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
     REGISTRY,
     q_attribution_last_touch,
     q_mann_whitney_u,
-    q_spearman_rho,
     q_tree_reachability,
-    q_weighted_median,
 )
 from etl_pipeline_project_spark.sources.readers import load_table
+
+q_spearman_rho = REGISTRY["q_spearman_rho"]
+q_weighted_median = REGISTRY["q_weighted_median"]
 
 
 def test_attribution_conserves_purchases(spark, sf_dir):
@@ -66,8 +69,6 @@ def test_spearman_in_unit_interval(spark, sf_dir):
 def test_spearman_matches_twin_on_null_measures(spark, sf_dir, tmp_path):
     """Rows with a NULL quantity, a NULL price or both take no part in
     either rank, in the side moments or in n; the DuckDB twin agrees."""
-    import duckdb
-
     from etl_pipeline_project_spark.queries import ORACLE
 
     con = duckdb.connect()
@@ -92,21 +93,30 @@ def test_spearman_matches_twin_on_null_measures(spark, sf_dir, tmp_path):
     assert got == want
 
 
-def test_spearman_perfect_monotone_is_one(spark, sf_dir):
-    # rank-correlating a column with itself must give rho == 1 exactly
-    from etl_pipeline_project_spark.session import get_spark  # noqa: F401
-    from pyspark.sql import Window
+def _spearman_on_price(spark, sf_dir, tmp_path, price):
+    duckdb.execute(
+        f"""COPY (
+          SELECT * REPLACE (CAST({price} AS DOUBLE) AS l_extendedprice)
+          FROM '{sf_dir}/lineitem.parquet'
+        ) TO '{tmp_path}/lineitem.parquet' (FORMAT PARQUET)"""
+    )
+    rows = q_spearman_rho(spark, str(tmp_path)).collect()
+    assert len(rows) == 3
+    assert all(r["n"] > 1 for r in rows)
+    return [r["spearman_rho"] for r in rows]
 
-    li = load_table(spark, sf_dir, "lineitem").limit(500)
-    w = Window.partitionBy(F.lit(1)).orderBy("l_extendedprice")
-    peers = w.rangeBetween(Window.currentRow, Window.currentRow)
-    r2 = 2 * F.rank().over(w) + F.count(F.lit(1)).over(peers) - 1
-    df = li.select(r2.alias("rx2")).withColumn("ry2", F.col("rx2"))
-    stats = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.corr(F.col("rx2").cast("double"), F.col("ry2").cast("double")).alias("c"),
-    ).first()
-    assert abs(stats["c"] - 1.0) < 1e-12
+
+def test_spearman_perfect_monotone_is_one(spark, sf_dir, tmp_path):
+    """A price increasing in quantity ranks every row alike on both sides
+    (ties included), so the key's rho is exactly 1 in every flag group."""
+    rhos = _spearman_on_price(spark, sf_dir, tmp_path, "l_quantity * 1000 + 7")
+    assert rhos == pytest.approx([1.0] * 3, abs=1e-12)
+
+
+def test_spearman_perfect_antimonotone_is_minus_one(spark, sf_dir, tmp_path):
+    """A price falling as quantity grows gives rho exactly -1."""
+    rhos = _spearman_on_price(spark, sf_dir, tmp_path, "(100 - l_quantity) * 1000")
+    assert rhos == pytest.approx([-1.0] * 3, abs=1e-12)
 
 
 def test_mann_whitney_identity(spark, sf_dir):

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_auc_roc,
+    REGISTRY,
     q_lambda_array_suite,
     q_struct_ops,
     q_vacuum_plan,
@@ -49,7 +49,7 @@ def test_lambda_suite_consistency(spark, sf_dir):
 
 
 def test_auc_range_and_u_identity(spark, sf_dir):
-    r = q_auc_roc(spark, sf_dir).first()
+    r = REGISTRY["q_auc_roc"](spark, sf_dir).first()
     assert r["n_pos"] > 0 and r["n_neg"] > 0
     assert 0.0 <= r["auc"] <= 1.0
     # u_doubled / (2 n1 n0) must reproduce auc exactly

@@ -4,11 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_project_spark.queries import (
-    REGISTRY,
-    q_array_set_ops,
-    q_id_gap_ranges,
-)
+from etl_pipeline_project_spark.queries import REGISTRY, q_array_set_ops
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
@@ -48,7 +44,7 @@ def test_array_set_algebra_consistency(spark, sf_dir):
 
 
 def test_id_gap_ranges_reconstruct(spark, sf_dir):
-    rows = q_id_gap_ranges(spark, sf_dir).collect()
+    rows = REGISTRY["q_id_gap_ranges"](spark, sf_dir).collect()
     li = load_table(spark, sf_dir, "lineitem")
     ids = {r["id"] for r in li.select(F.col("l_orderkey").alias("id")).distinct().collect()}
     lo, hi = min(ids), max(ids)

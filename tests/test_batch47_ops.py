@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_pipeline_project_spark.queries import (
-    q_abc_classes,
+    REGISTRY,
     q_interarrival_histogram,
     q_price_volume_bridge,
     q_segment_migration,
@@ -27,7 +27,7 @@ def test_bridge_reconciles_exactly(spark, sf_dir):
 
 
 def test_abc_partition_and_shares(spark, sf_dir):
-    rows = {r["abc_class"]: r for r in q_abc_classes(spark, sf_dir).collect()}
+    rows = {r["abc_class"]: r for r in REGISTRY["q_abc_classes"](spark, sf_dir).collect()}
     assert set(rows) <= {"A", "B", "C"}
     li = load_table(spark, sf_dir, "lineitem")
     n_parts = li.select("l_partkey").distinct().count()

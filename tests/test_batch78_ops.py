@@ -4,10 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_project_spark.queries import (
-    q_decayed_frequency,
-    q_decile_spread,
-)
+from etl_pipeline_project_spark.queries import REGISTRY, q_decayed_frequency
 from etl_pipeline_project_spark.sources.readers import load_table
 
 
@@ -22,7 +19,7 @@ def test_decayed_score_bounds(spark, sf_dir):
 
 
 def test_decile_spread_order(spark, sf_dir):
-    rows = q_decile_spread(spark, sf_dir).collect()
+    rows = REGISTRY["q_decile_spread"](spark, sf_dir).collect()
     assert len(rows) == 5
     for r in rows:
         assert r["p10_cents"] <= r["p90_cents"]

@@ -1,5 +1,6 @@
 """``bench.py`` artifacts say which commit and CPU count produced them,
-and how many timed runs each key's median is over."""
+how many timed runs each key's median is over, and each key's fastest
+run."""
 
 from __future__ import annotations
 
@@ -25,9 +26,11 @@ def test_provenance_names_commit_and_cpus(monkeypatch):
 
 
 def test_run_keys_counts_timed_runs(spark, sf_dir):
-    timings, n_runs, errors = bench._run_keys(spark, ["q_scan_table"], sf_dir)
+    timings, mins, n_runs, errors = bench._run_keys(spark, ["q_scan_table"], sf_dir)
     assert errors == {}
     assert set(timings) == {"q_scan_table"}
+    assert set(mins) == {"q_scan_table"}
+    assert 0 < mins["q_scan_table"] <= timings["q_scan_table"]
     # one timed run when the warm-up exceeded HEAVY_CUTOFF_S, else N_RUNS - 1
     assert set(n_runs) == {"q_scan_table"}
     assert n_runs["q_scan_table"] in (1, bench.N_RUNS - 1)

@@ -1,52 +1,14 @@
-"""Semantics tests for the change-history, profiling, and new
-LLM-pipeline operators (the oracle gate checks cross-engine equality;
+"""Semantics tests for the profiling and LLM-pipeline operators (the oracle gate checks cross-engine equality;
 these check the *invariants* the operators promise)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_project_spark.operators.history import cdc_latest, scd2_versions
 from etl_pipeline_project_spark.operators.profiling import profile_columns
 from etl_pipeline_project_spark.operators.similarity import centroid_fixed_point
 from etl_pipeline_project_spark.operators.text_analysis import chunk_text, ngram_pairs
 from etl_pipeline_project_spark.sources.readers import load_table
-
-
-def test_scd2_one_current_per_key_and_contiguous(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    hist = scd2_versions(
-        orders, "o_custkey", ["o_orderdate", "o_orderkey"], ["o_orderpriority"]
-    )
-    # exactly one open (is_current) version per key
-    per_key = hist.groupBy("o_custkey").agg(
-        F.sum(F.col("is_current").cast("int")).alias("n_open"),
-        F.count(F.lit(1)).alias("n_versions"),
-        F.max("version").alias("max_version"),
-    )
-    bad = per_key.filter(
-        (F.col("n_open") != 1) | (F.col("max_version") != F.col("n_versions"))
-    ).count()
-    assert bad == 0
-    # effective ranges never invert
-    assert (
-        hist.filter(F.col("effective_to") < F.col("effective_from")).count() == 0
-    )
-
-
-def test_cdc_latest_drops_deleted_keys_and_keeps_one_row(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    op = F.when(F.col("event_type") == "error", F.lit("D")).otherwise(F.lit("U"))
-    state = cdc_latest(ev, "user_id", ["ts", "event_id"], op)
-    # one row per surviving key
-    assert state.groupBy("user_id").count().filter("count > 1").count() == 0
-    # every surviving row is the key's true latest record (no 'D' survives)
-    assert state.filter(F.col("op") == "D").count() == 0
-    latest = (
-        ev.groupBy("user_id").agg(F.max("ts").alias("max_ts"))
-    )
-    joined = state.join(latest, "user_id").filter(F.col("ts") != F.col("max_ts"))
-    assert joined.count() == 0
 
 
 def test_profile_counts_match_direct_aggregates(spark, sf_dir):

@@ -1,14 +1,8 @@
-"""Property-based tests for fuzzy matching and the coarse-bucket semi
-join.
-
-- fuzzy_match vs a Python Levenshtein DP: the length-band prune is a
-  NECESSARY condition for edit distance, so it must never drop a true
-  match — generated strings include equal-length, off-by-max, and
-  far-apart pairs.
-- coarse_bucket_semi_join ≡ a plain left-semi join for any bucket count
-  (the membership pre-filter passes a superset; correctness must never
-  depend on it) — checked down to n_buckets=1, where every row passes
-  the filter and the exact join does all the work.
+"""Property-based test for the coarse-bucket semi join:
+coarse_bucket_semi_join ≡ a plain left-semi join for any bucket count
+(the membership pre-filter passes a superset; correctness must never
+depend on it) — checked down to n_buckets=1, where every row passes the
+filter and the exact join does all the work.
 """
 
 from __future__ import annotations
@@ -17,58 +11,13 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
-from etl_pipeline_project_spark.operators.joins import (
-    coarse_bucket_semi_join,
-    fuzzy_match,
-)
+from etl_pipeline_project_spark.operators.joins import coarse_bucket_semi_join
 
 _SETTINGS = settings(
     max_examples=6,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
-
-
-def _lev(a: str, b: str) -> int:
-    if len(a) < len(b):
-        a, b = b, a
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
-TXT_SCHEMA = T.StructType(
-    [T.StructField("id", T.LongType(), False), T.StructField("t", T.StringType(), False)]
-)
-
-words = st.text(alphabet="abc", min_size=0, max_size=6)
-
-
-@given(
-    qs=st.lists(words, min_size=1, max_size=4),
-    cs=st.lists(words, min_size=1, max_size=8),
-    maxd=st.integers(min_value=0, max_value=3),
-)
-@_SETTINGS
-def test_fuzzy_match_matches_dp_reference(spark, qs, cs, maxd):
-    # disjoint id spaces so the q_id != c_id guard never hides a pair
-    qdf = spark.createDataFrame(list(enumerate(qs)), TXT_SCHEMA)
-    cdf = spark.createDataFrame([(100 + i, c) for i, c in enumerate(cs)], TXT_SCHEMA)
-    got = {
-        (r["q_id"], r["c_id"]): r["edit_distance"]
-        for r in fuzzy_match(qdf, cdf, "id", "id", "t", maxd).collect()
-    }
-    expect = {
-        (qi, 100 + ci): _lev(q, c)
-        for qi, q in enumerate(qs)
-        for ci, c in enumerate(cs)
-        if _lev(q, c) <= maxd
-    }
-    assert got == expect
 
 
 KV_SCHEMA = T.StructType(

@@ -1,6 +1,5 @@
-"""Property-based tests for the history operators (SCD2 versioning, CDC
-collapse) and the core text primitives, against Python references on
-generated inputs."""
+"""Property-based tests for the core text primitives, against Python
+references on generated inputs."""
 
 from __future__ import annotations
 
@@ -8,10 +7,8 @@ import re
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_pipeline_project_spark.operators.history import cdc_latest, scd2_versions
 from etl_pipeline_project_spark.operators.text_analysis import (
     chunk_text,
     normalize_text,
@@ -23,66 +20,6 @@ _SETTINGS = settings(
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
-
-CHANGES_SCHEMA = T.StructType(
-    [
-        T.StructField("k", T.StringType(), False),
-        T.StructField("seq", T.LongType(), False),
-        T.StructField("attr", T.StringType(), False),
-        T.StructField("op", T.StringType(), False),
-    ]
-)
-
-# (key, seq) unique => total order per key without a tie-break column
-changes_strategy = st.dictionaries(
-    st.tuples(st.sampled_from(["a", "b", "c"]), st.integers(min_value=0, max_value=40)),
-    st.tuples(st.sampled_from(["u", "v", "w"]), st.sampled_from(["I", "U", "D"])),
-    min_size=0,
-    max_size=15,
-)
-
-
-def _rows(changes):
-    return [(k, seq, attr, op) for (k, seq), (attr, op) in sorted(changes.items())]
-
-
-@given(changes=changes_strategy)
-@_SETTINGS
-def test_scd2_versions_match_reference(spark, changes):
-    rows = _rows(changes)
-    df = spark.createDataFrame(rows, CHANGES_SCHEMA)
-    got = {
-        (r["k"], r["version"]): (r["attr"], r["effective_from"], r["effective_to"], r["is_current"])
-        for r in scd2_versions(df, "k", ["seq"], ["attr"]).collect()
-    }
-    by_key: dict[str, list] = {}
-    for k, seq, attr, _op in rows:
-        by_key.setdefault(k, []).append((seq, attr))
-    expect = {}
-    for k, evs in by_key.items():
-        evs.sort()
-        for i, (seq, attr) in enumerate(evs):
-            eff_to = evs[i + 1][0] if i + 1 < len(evs) else None
-            expect[(k, i + 1)] = (attr, seq, eff_to, eff_to is None)
-    assert got == expect
-
-
-@given(changes=changes_strategy)
-@_SETTINGS
-def test_cdc_latest_matches_reference(spark, changes):
-    rows = _rows(changes)
-    df = spark.createDataFrame(rows, CHANGES_SCHEMA)
-    got = {
-        r["k"]: (r["seq"], r["attr"], r["op"])
-        for r in cdc_latest(df, "k", ["seq"], F.col("op")).collect()
-    }
-    latest: dict[str, tuple] = {}
-    for k, seq, attr, op in rows:
-        if k not in latest or seq > latest[k][0]:
-            latest[k] = (seq, attr, op)
-    expect = {k: v for k, v in latest.items() if v[2] != "D"}
-    assert got == expect
-
 
 texts = st.lists(
     st.text(alphabet="aB c\t\nd.!", min_size=0, max_size=30),

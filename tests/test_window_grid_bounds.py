@@ -1,15 +1,11 @@
-"""Cardinality-bound evidence for the plan-audit window whitelists.
+"""Cardinality bounds of the keys that window over a GRID.
 
-tools/plan_audit.py exempts two sets of keys from the
-no-unbounded-window gates — WINDOW_GRID_OK (round 8: windows fed by an
-Exchange SinglePartition over a domain-bounded grid) and ENUM_WINDOW_OK
-(round 9: windows hash-partitioned by a bounded enum over a
-domain-bounded grid) — each on a one-line justification that the
-window's input is a GRID (days / enum cells / fixed buckets), not
-corpus-scaled rows. This test turns those one-liners into a measured
-property (round-8 verdict item 8): run every whitelisted key at
-sf0.001 and sf0.01 (a 10x fact-table scale-up) and assert the output
-shows grid behavior, not corpus behavior:
+Each key in GRID_KEYS runs its window (unpartitioned, or partitioned by a
+bounded enum) over a domain-bounded grid — days, enum cells, fixed
+buckets — not over corpus-scaled rows; the one-line reason is next to
+each key. This test turns those reasons into a measured property: run
+every key at sf0.001 and sf0.01 (a 10x fact-table scale-up) and assert
+the output shows grid behavior, not corpus behavior:
 
 - default: output rows grow <= 3x under the 10x fact scale-up
   (equal-or-calendar growth — saturated grids barely move);
@@ -30,14 +26,8 @@ asserts its true window input (the day grid) directly.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo/tools")
-
-from plan_audit import ENUM_WINDOW_OK, WINDOW_GRID_OK  # noqa: E402
 
 from etl_pipeline_project_spark.queries import REGISTRY
 from etl_pipeline_project_spark.sources.readers import load_table
@@ -58,7 +48,33 @@ DOMAIN_CEILING = {
     "q_survival_table": 2500,
 }
 
-KEYS = sorted((set(WINDOW_GRID_OK) | set(ENUM_WINDOW_OK)) - {"q_compaction_plan"})
+GRID_KEYS = {
+    "q_adoption_curve": "event_type x first-adoption day (calendar-bounded daily grid)",
+    "q_alloc_largest_remainder": "nations (fixed 25-row dimension)",
+    "q_backlog_curve": "days (calendar-bounded event series)",
+    "q_benford_digits": "leading digits (<= 9 rows)",
+    "q_benjamini_hochberg": "event types (fixed enum of hypotheses)",
+    "q_bootstrap_diff_ci": "bootstrap replicates (fixed 32)",
+    "q_centered_ma": "days (calendar-bounded)",
+    "q_chi_square": "event_type x value bucket (fixed contingency cells)",
+    "q_complementary_suppression": "event_type x 4 cohorts (fixed <= |enum|*4 cells)",
+    "q_emd_tcloseness": "value/50 buckets (fixed quantization domain)",
+    "q_event_rate_alert": "event_type x hour (calendar-bounded hourly grid)",
+    "q_haberman_residuals": "event_type x bucket (fixed cells)",
+    "q_hierarchical_share": "region x nation (fixed 25-row dimension)",
+    "q_max_concurrency": "days (calendar-bounded)",
+    "q_mtd_ytd": "order dates (calendar-bounded)",
+    "q_multi_offset_lags": "days (calendar-bounded)",
+    "q_mutual_information": "event_type x bucket (fixed cells)",
+    "q_newsvendor": "event_type x distinct daily demands (<= days, calendar-bounded)",
+    "q_neyman_allocation": "order priorities (fixed enum, 5)",
+    "q_peak_detect": "days (calendar-bounded)",
+    "q_running_distinct": "first-order dates (calendar-bounded)",
+    "q_semi_additive_balance": "days (calendar-bounded)",
+    "q_survival_table": "distinct day-durations (date-span-bounded)",
+    "q_wow_change": "weeks (calendar-bounded)",
+}
+KEYS = sorted(GRID_KEYS)
 
 
 @pytest.mark.parametrize("key", KEYS)
@@ -70,13 +86,12 @@ def test_whitelisted_grid_is_fact_size_independent(spark, key) -> None:
     if ceiling is not None:
         assert small <= ceiling and big <= ceiling, (
             f"{key}: output {small}/{big} exceeds its domain ceiling "
-            f"{ceiling} — the whitelisted grid looks corpus-scaled"
+            f"{ceiling} — the window grid looks corpus-scaled"
         )
     else:
         assert big <= MAX_GROWTH * small, (
             f"{key}: output rows grew {small} -> {big} under a 10x fact "
-            "scale-up — the whitelisted grid looks corpus-scaled; rewrite "
-            "it onto global/grouped_order_stats instead of whitelisting"
+            "scale-up — the window grid looks corpus-scaled"
         )
 
 

@@ -18,12 +18,13 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_pipeline_project_spark.schemas import TESTDATA_TABLES  # noqa: E402
 from etl_pipeline_project_spark.session import get_spark  # noqa: E402

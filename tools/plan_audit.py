@@ -10,10 +10,11 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_pipeline_project_spark.queries import REGISTRY  # noqa: E402
 from etl_pipeline_project_spark.session import get_spark  # noqa: E402
@@ -30,81 +31,57 @@ from etl_pipeline_project_spark.session import get_spark  # noqa: E402
 # — ArrowEvalPython, FlatMapGroupsInPandas, MapInPandas — are all
 # Arrow-batched). q_udtf_split is the one documented exception: its
 # docstring declares the UDTF row path deliberate (the vectorized
-# fast path is q_doc_chunk's explode).
+# fast path is q_doc_chunk's explode). The third generic rule bans a
+# shuffle join keyed only by bounded enums (below).
+#
+# Windows are not gated generically: a plain window (including one fed
+# by Exchange SinglePartition, or hash-partitioned by a bounded enum)
+# beat the range-partitioned order-statistics form at every rung of the
+# local scale ladder (sf0.01 -> sf3, CHANGES.md). Per-key checks assert
+# instead that a key's window runs over its collapsed aggregate
+# (windows_over_aggregate) where the key collapses its input first.
 ROW_PYTHON_OK = {"q_udtf_split"}
 
-# ---- round-8 rule: no Window fed by Exchange SinglePartition ----
-# An unpartitioned window (row_number/ntile/SUM OVER (ORDER BY ...))
-# plans as Exchange SinglePartition -> Sort -> Window: ONE reducer
-# buffers the window's whole input — the scale-killer class the
-# round-7 audit missed (the generic gate only banned CartesianProduct
-# and row-Python, so 12 full-table rank keys passed it). The rule:
-# every Exchange SinglePartition whose ANCESTOR chain reaches a
-# Window (before an Aggregate/Limit/Join absorbs it) must have a
-# provably-bounded input — a scalar aggregate (keys=[]) or a
-# Limit/TakeOrdered below the exchange, or the key sits in
-# WINDOW_GRID_OK with a one-line domain-bound justification (the
-# q_udtf_split precedent). Grouped aggregates do NOT auto-exempt:
-# a groupBy(entity) grid scales with the corpus (the old q_auc_roc
-# distinct-score shape), which is exactly what global_order_stats
-# now exists to replace.
-WINDOW_GRID_OK = {
-    "q_alloc_largest_remainder": "grid = nations (fixed 25-row dimension)",
-    "q_backlog_curve": "grid = days (calendar-bounded event series)",
-    "q_benford_digits": "grid = leading digits (<= 9 rows)",
-    "q_benjamini_hochberg": "grid = event types (fixed enum of hypotheses)",
-    "q_bootstrap_diff_ci": "grid = bootstrap replicates (fixed 32)",
-    "q_centered_ma": "grid = days (calendar-bounded)",
-    "q_chi_square": "grid = event_type x value bucket (fixed contingency cells)",
-    "q_compaction_plan": "grid = days (calendar-bounded manifest)",
-    "q_emd_tcloseness": "grid = value/50 buckets (fixed quantization domain)",
-    "q_haberman_residuals": "grid = event_type x bucket (fixed cells)",
-    "q_hierarchical_share": "grid = region x nation (fixed 25-row dimension)",
-    "q_max_concurrency": "grid = days (calendar-bounded)",
-    "q_mtd_ytd": "grid = order dates (calendar-bounded)",
-    "q_multi_offset_lags": "grid = days (calendar-bounded)",
-    "q_mutual_information": "grid = event_type x bucket (fixed cells)",
-    "q_neyman_allocation": "grid = order priorities (fixed enum, 5)",
-    "q_peak_detect": "grid = days (calendar-bounded)",
-    "q_running_distinct": "grid = first-order dates (calendar-bounded)",
-    "q_semi_additive_balance": "grid = days (calendar-bounded)",
-    "q_survival_table": "grid = distinct day-durations (date-span-bounded)",
-    "q_wow_change": "grid = weeks (calendar-bounded)",
-}
-
-# Keys whose enum-partitioned window runs over a DOMAIN-BOUNDED grid
-# (not raw corpus rows) that the textual bounded-below probe cannot
-# prove — each with the one-line justification the round-8 precedent
-# requires. Round-9 sweep: 11 hits, 7 rewritten onto
-# grouped_order_stats / aggregate+broadcast (quantiles,
-# percentile_disc, iqr_outliers, decile_spread,
-# quantile_treatment_effect, minmax_scale, window_distribution),
-# 4 whitelisted below. Grid boundedness of these is asserted by
-# tests/test_window_grid_bounds.py.
-ENUM_WINDOW_OK: dict[str, str] = {
-    "q_adoption_curve": "window input = event_type x first-adoption day (calendar-bounded daily grid)",
-    "q_event_rate_alert": "window input = event_type x hour (calendar-bounded hourly grid)",
-    "q_complementary_suppression": "window input = event_type x 4 cohorts (fixed <= |enum|*4 cells)",
-    "q_newsvendor": "window input = event_type x distinct daily demands (<= days, calendar-bounded)",
-}
-
-ENUM_COLS = {
-    # fixed enums in the TPC-H-ish testdata schema
+# Columns the enum-JOIN rule treats as bounded-cardinality shuffle keys:
+# the fixed enums of the TPC-H-ish testdata schema, common derived enum
+# aliases, and the coarse blocking columns the similarity tier joins on
+# (10 labels in the testdata; any IVF-style block count is tiny next to
+# the cluster's core count).
+ENUM_JOIN_COLS = {
     "l_returnflag", "l_linestatus", "l_shipmode", "l_shipinstruct",
     "o_orderstatus", "o_orderpriority", "c_mktsegment", "event_type",
-    # common derived enum aliases used across the registry
     "weekday", "dow", "side", "_side", "flag", "grp", "bucket_kind",
+    "label", "lb", "block", "_block_b", "plabel", "nlabel",
 }
-
-# Columns the enum-JOIN rule treats as bounded-cardinality shuffle keys:
-# the window-rule enums plus the coarse blocking columns the similarity
-# tier joins on (10 labels in the testdata; any IVF-style block count is
-# tiny next to the cluster's core count).
-ENUM_JOIN_COLS = ENUM_COLS | {"label", "lb", "block", "_block_b", "plabel", "nlabel"}
 
 # Keys whose enum-keyed shuffle join is bounded by construction in a way
 # the textual probe cannot prove — one-line justification each.
 ENUM_JOIN_OK: dict[str, str] = {}
+
+
+def _indent(line: str) -> int:
+    m = re.search(r"[+:]- ", line)
+    return m.start() if m else -1
+
+
+def windows_over_aggregate(p: str) -> bool:
+    """The plan has a Window, and below every Window the first
+    aggregate-or-scan operator is an Aggregate: the window runs over a
+    collapsed (distinct-value or per-entity) table, never raw scan rows."""
+    lines = p.splitlines()
+    found = False
+    for i, ln in enumerate(lines):
+        if not re.search(r"\bWindow \[", ln):
+            continue
+        found = True
+        d = _indent(ln)
+        for k in range(i + 1, len(lines)):
+            dk = _indent(lines[k])
+            if (dk != -1 and dk <= d) or re.search(r"Scan\b", lines[k]):
+                return False
+            if "Aggregate" in lines[k]:
+                break
+    return found
 
 
 def main() -> int:
@@ -260,16 +237,20 @@ def main() -> int:
     p = plan("q_iqr_outliers")
     checks.append(
         (
-            "q_iqr_outliers count-based quantile (no sort-based percentile buffer; broadcast fences)",
-            "percentile" not in p.lower() and "BroadcastHashJoin" in p,
+            "q_iqr_outliers count-based quantile (no sort-based percentile buffer; broadcast fences), CDF window over the distinct-value aggregate",
+            "percentile" not in p.lower()
+            and "BroadcastHashJoin" in p
+            and windows_over_aggregate(p),
             p[:300],
         )
     )
     p = plan("q_percentile_disc")
     checks.append(
         (
-            "q_percentile_disc count-based quantile (no percentile aggregate in the plan)",
-            "percentile" not in p.lower() and "partial" in p.lower(),
+            "q_percentile_disc count-based quantile (no percentile aggregate in the plan), CDF window over the distinct-value aggregate",
+            "percentile" not in p.lower()
+            and "partial" in p.lower()
+            and windows_over_aggregate(p),
             p[:300],
         )
     )
@@ -352,38 +333,27 @@ def main() -> int:
     p = plan("q_spearman_rho")
     checks.append(
         (
-            "q_spearman_rho rank maps pinned (4 checkpoint scans); only the"
-            " CROSS moment rides the fact (r13 weighted side moments)",
-            # the grouped two-pass rank subtree sits behind the lazy
-            # localCheckpoint (shape asserted by the helper's pytest);
-            # visible here: the pinned map consumed 4× (qmap/pmap filters
-            # + the two c-weighted side-moment aggregates), ONE parquet
-            # scan of the fact (only sxy needs row-level pairing), and 3
-            # flag exchanges of which 2 are distinct-value-map-sized
-            len(re.findall(r"Exchange hashpartitioning\(l_returnflag", p)) == 3
-            and len(re.findall(r"Scan ExistingRDD", p)) == 4
-            and len(re.findall(r"Scan parquet", p)) == 1,
+            "q_spearman_rho rank maps from windows over the distinct-value"
+            " aggregates, per-flag side moments broadcast, no percentile",
+            windows_over_aggregate(p)
+            and "BroadcastHashJoin" in p
+            and "percentile" not in p.lower(),
             p[:300],
         )
     )
     p = plan("q_mann_whitney_u")
     checks.append(
         (
-            "q_mann_whitney_u rank sums from the distinct-value table via the grouped two-pass helper (round-9)",
-            # every weekday-keyed window must be the helper's bounded
-            # offsets pass (ordered by _pid over the (_pid, weekday)
-            # aggregate) — never a value-ordered rank over raw events
-            "windowspecdefinition(_pid" in p
-            and len(re.findall(r"windowspecdefinition\(weekday#\d+L?, _pid#", p))
-            == len(re.findall(r"windowspecdefinition\(weekday#", p)),
+            "q_mann_whitney_u rank sums from a window over the (weekday, value) aggregate, never raw events",
+            windows_over_aggregate(p),
             p[:300],
         )
     )
     p = plan("q_quantile_normalize")
     checks.append(
         (
-            "q_quantile_normalize rank map from the grouped two-pass helper + (event_type, v) join-back (round-9)",
-            "windowspecdefinition(_pid" in p,
+            "q_quantile_normalize rank map from a window over the (event_type, v) aggregate + join-back",
+            windows_over_aggregate(p),
             p[:300],
         )
     )
@@ -506,7 +476,7 @@ def main() -> int:
     checks.append(
         (
             "q_partition_bounds collapses to distinct values map-side before the boundary window",
-            len(re.findall(r"HashAggregate", p)) >= 2,
+            len(re.findall(r"HashAggregate", p)) >= 2 and windows_over_aggregate(p),
             p[:300],
         )
     )
@@ -531,7 +501,7 @@ def main() -> int:
     checks.append(
         (
             "q_auc_roc rank stats on distinct scores (two HashAggregates), no row-level sort of the fact table",
-            len(re.findall(r"HashAggregate", p)) >= 2,
+            len(re.findall(r"HashAggregate", p)) >= 2 and windows_over_aggregate(p),
             p[:300],
         )
     )
@@ -794,9 +764,9 @@ def main() -> int:
     p = plan("q_decile_spread")
     checks.append(
         (
-            "q_decile_spread count-based percentiles (no percentile buffer) via grouped two-pass CDF (round-9)",
+            "q_decile_spread count-based percentiles (no percentile buffer), CDF window over the distinct-value aggregate",
             "percentile" not in p.lower()
-            and "windowspecdefinition(_pid" in p,
+            and windows_over_aggregate(p),
             p[:300],
         )
     )
@@ -1061,10 +1031,11 @@ def main() -> int:
     p = plan("q_quantile_treatment_effect")
     checks.append(
         (
-            "q_quantile_treatment_effect 4-row p-grid broadcast, no cartesian, map-side value collapse",
+            "q_quantile_treatment_effect 4-row p-grid broadcast, no cartesian, CDF window over the map-side value collapse",
             "BroadcastNestedLoop" in p
             and "CartesianProduct" not in p
-            and "partial" in p.lower(),
+            and "partial" in p.lower()
+            and windows_over_aggregate(p),
             p[:300],
         )
     )
@@ -1095,10 +1066,8 @@ def main() -> int:
     p = plan("q_uplift_deciles")
     checks.append(
         (
-            "q_uplift_deciles global rank via the two-pass range-partitioned window (round-8)",
-            # the one SinglePartition left is the bounded scalar-total
-            # aggregate (COUNT(*) OVER () replacement), not a Window feed
-            "windowspecdefinition(_pid" in p,
+            "q_uplift_deciles global rank window over the user-grain aggregate",
+            windows_over_aggregate(p),
             p[:300],
         )
     )
@@ -1275,18 +1244,18 @@ def main() -> int:
     p = plan("q_cost_threshold")
     checks.append(
         (
-            "q_cost_threshold broadcast-grid confusion scan over the two-pass rank grid (round-8)",
+            "q_cost_threshold broadcast-grid confusion scan, no cartesian",
             "BroadcastNestedLoop" in p
-            and "windowspecdefinition(_pid" in p,
+            and "CartesianProduct" not in p,
             p[:300],
         )
     )
     p = plan("q_matched_pairs_att")
     checks.append(
         (
-            "q_matched_pairs_att as-of carries via two-pass struct extrema, no candidate explosion (round-8)",
+            "q_matched_pairs_att as-of carries via struct-extrema windows over the user-grain aggregate, no candidate explosion",
             "CartesianProduct" not in p
-            and "windowspecdefinition(_pid" in p,
+            and windows_over_aggregate(p),
             p[:300],
         )
     )
@@ -1408,20 +1377,28 @@ def main() -> int:
             p[:300],
         )
     )
-    for key in ["q_expected_calibration_error", "q_risk_coverage", "q_abc_xyz"]:
+    for key in ["q_expected_calibration_error", "q_risk_coverage"]:
         p = plan(key)
         checks.append(
             (
-                f"{key} global rank/cumsum via the two-pass range-partitioned window (round-8)",
-                "windowspecdefinition(_pid" in p,
+                f"{key} rank and row count from windows over ONE scan of the scored rows",
+                len(re.findall(r"Scan parquet", p)) == 1 and "Window [" in p,
                 p[:300],
             )
         )
+    p = plan("q_abc_xyz")
+    checks.append(
+        (
+            "q_abc_xyz running share window over the part aggregate",
+            windows_over_aggregate(p),
+            p[:300],
+        )
+    )
     p = plan("q_qini_curve")
     checks.append(
         (
-            "q_qini_curve two-pass global rank + broadcast triangular decile cumulatives (round-8)",
-            "windowspecdefinition(_pid" in p
+            "q_qini_curve global rank window over the user-grain aggregate + broadcast triangular decile cumulatives",
+            windows_over_aggregate(p)
             and "BroadcastNestedLoop" in p
             and "CartesianProduct" not in p,
             p[:300],
@@ -1429,107 +1406,6 @@ def main() -> int:
     )
 
 
-
-    def _indent(line: str) -> int:
-        m = re.search(r"[+:]- ", line)
-        return m.start() if m else -1
-
-    def _ancestor_reaches_window(lines: list[str], i: int, d: int) -> bool:
-        """Walk up from line i (indent d): does the nearest absorbing
-        ancestor chain hit a Window before an Aggregate/Limit/Join?
-        Marker-less lines (plan root / AQE headers) count as indent-0
-        ancestors, so a root-level Window participates (round-8 ADVICE:
-        the old walk skipped indent -1 lines entirely)."""
-        j, cur = i - 1, d
-        while j >= 0 and cur > 0:
-            dj = max(_indent(lines[j]), 0)
-            if dj < cur:
-                a = lines[j]
-                cur = dj
-                if re.search(r"\bWindow\b", a) and "WindowGroupLimit" not in a:
-                    return True
-                if re.search(r"Aggregate|Limit|TakeOrdered|Join", a):
-                    return False
-            j -= 1
-        return False
-
-    def single_partition_windows(p: str) -> list[str]:
-        """Exchange SinglePartition nodes that feed a Window without a
-        bounding scalar aggregate / limit below the exchange."""
-        lines = p.splitlines()
-        hits = []
-        for i, ln in enumerate(lines):
-            if "Exchange SinglePartition" not in ln:
-                continue
-            d = _indent(ln)
-            window_above = _ancestor_reaches_window(lines, i, d)
-            if not window_above:
-                continue
-            # bounded below? scalar aggregate or limit directly under the
-            # exchange (before any other exchange)
-            bounded = False
-            for k in range(i + 1, len(lines)):
-                dk = _indent(lines[k])
-                if dk != -1 and dk <= d:
-                    break
-                if re.search(r"Aggregate\(keys=\[\]", lines[k]) or re.search(
-                    r"Limit|TakeOrdered", lines[k]
-                ):
-                    bounded = True
-                    break
-                if re.search(r"Aggregate\(keys=\[[^\]]", lines[k]) or "Exchange" in lines[k]:
-                    break
-            if not bounded:
-                hits.append(ln.strip()[:120])
-        return hits
-
-    # ---- round-9 rule: no Window hash-partitioned by a bare bounded
-    # enum over corpus-scaled input ----
-    # rank() OVER (PARTITION BY returnflag/weekday/event_type ORDER BY v)
-    # plans as Exchange hashpartitioning(enum) -> Sort -> Window: each
-    # reducer gets O(corpus / |enum|) rows — the round-8 rule's smaller
-    # sibling (divided by a small constant, same asymptotic wall; round-8
-    # verdict item 1). The rule: every Exchange hashpartitioning whose
-    # keys are ALL fixed-cardinality enum columns and whose ancestor
-    # chain reaches a Window must be provably bounded below — a scalar
-    # aggregate / limit, or an Aggregate keyed by `_pid` (the grouped
-    # two-pass helper's offsets input: <= #ranges rows per enum value by
-    # construction) — or the key sits in WINDOW_GRID_OK / ENUM_WINDOW_OK
-    # with a one-line domain-bound justification.
-
-    def enum_partition_windows(p: str) -> list[str]:
-        lines = p.splitlines()
-        hits = []
-        for i, ln in enumerate(lines):
-            m = re.search(r"Exchange hashpartitioning\(([^)]*)\)", ln)
-            if m is None:
-                continue
-            attrs = re.findall(r"(\w+)#\d+", m.group(1))
-            if not attrs or not all(a in ENUM_COLS for a in attrs):
-                continue
-            d = _indent(ln)
-            if not _ancestor_reaches_window(lines, i, d):
-                continue
-            bounded = False
-            for k in range(i + 1, len(lines)):
-                dk = _indent(lines[k])
-                if dk != -1 and dk <= d:
-                    break
-                if (
-                    re.search(r"Aggregate\(keys=\[\]", lines[k])
-                    or re.search(r"Limit|TakeOrdered", lines[k])
-                    or re.search(r"Aggregate\(keys=\[[^\]]*_pid", lines[k])
-                ):
-                    bounded = True
-                    break
-                if (
-                    re.search(r"Aggregate\(keys=\[[^\]]", lines[k])
-                    or "Exchange" in lines[k]
-                ):
-                    break
-            if not bounded:
-                hits.append(ln.strip()[:120])
-        return hits
 
     # ---- round-9 rule (session 2): no shuffle JOIN keyed only by a
     # bounded enum over corpus-scaled input ----
@@ -1610,18 +1486,12 @@ def main() -> int:
             bad.append("CartesianProduct")
         if "BatchEvalPython" in p and key not in ROW_PYTHON_OK:
             bad.append("BatchEvalPython (row-at-a-time Python)")
-        spw = single_partition_windows(p)
-        if spw and key not in WINDOW_GRID_OK:
-            bad.append(f"Window over Exchange SinglePartition ({spw[0]})")
-        epw = enum_partition_windows(p)
-        if epw and key not in WINDOW_GRID_OK and key not in ENUM_WINDOW_OK:
-            bad.append(f"Window hash-partitioned by bare bounded enum ({epw[0]})")
         epj = enum_partition_joins(p)
         if epj and key not in ENUM_JOIN_OK:
             bad.append(f"Shuffle join keyed only by bounded enum ({epj[0]})")
         checks.append(
             (
-                f"{key} [generic] no cartesian, no row-Python, no single-partition window",
+                f"{key} [generic] no cartesian, no row-Python, no enum-keyed shuffle join",
                 not bad,
                 ", ".join(bad),
             )

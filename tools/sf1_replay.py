@@ -41,6 +41,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import tempfile
 import threading
 import time
 
@@ -122,9 +123,9 @@ SF10_EXCLUDED = [
     "q_dedup_groups", "q_cluster_size_stats",
 ]
 
-# the round-8 + round-9 two-pass rewrites: full differential vs twins
+# order-statistics keys: full differential vs twins
 TWIN_KEYS = [
-    # round-8 global_order_stats rewrites (q_skyline's quadratic
+    # global rank / running-sum windows (q_skyline's quadratic
     # NOT-EXISTS twin runs rows-only below)
     "q_ntile_quartiles", "q_ks_test", "q_partition_bounds",
     "q_auc_roc", "q_id_gap_ranges", "q_abc_classes", "q_gains_table",
@@ -132,7 +133,7 @@ TWIN_KEYS = [
     "q_matched_pairs_att", "q_abc_xyz", "q_palma_ratio",
     "q_expected_calibration_error", "q_qini_curve", "q_risk_coverage",
     "q_skew_report", "q_time_weighted_avg",
-    # round-9 grouped_order_stats rewrites
+    # per-group rank / CDF windows over distinct-value tables
     "q_spearman_rho", "q_mann_whitney_u", "q_quantile_normalize",
     "q_window_rank_semantics", "q_weighted_median", "q_quantiles",
     "q_percentile_disc", "q_iqr_outliers", "q_decile_spread",
@@ -171,8 +172,8 @@ ROWS_ONLY_KEYS = [
 
 # round-11 heavy tier for the sf3+ ladder (--copies != 10): the keys
 # whose scale behavior the ladder is meant to measure — dedup,
-# similarity, the capped production paths, and the two-pass rank
-# rewrites — full differential where the twin is linear-ish, rows-only
+# similarity, the capped production paths, and the order-statistics
+# windows — full differential where the twin is linear-ish, rows-only
 # where it is the documented quadratic formulation. Twins that outgrow
 # TWIN_TIMEOUT degrade to a recorded twin_timeout, never a hang.
 HEAVY_TWIN_KEYS = [
@@ -186,6 +187,14 @@ HEAVY_TWIN_KEYS = [
     "q_ks_test", "q_ntile_quartiles", "q_quantile_normalize",
     "q_window_distribution", "q_decile_spread", "q_minmax_scale",
     "q_time_weighted_avg", "q_auc_roc",
+    # the rest of the order-statistics windows; the per-entity inputs
+    # (users, orders, documents) grow with the copies
+    "q_partition_bounds", "q_id_gap_ranges", "q_abc_classes",
+    "q_gains_table", "q_calibration_bins", "q_uplift_deciles",
+    "q_cost_threshold", "q_matched_pairs_att", "q_abc_xyz",
+    "q_palma_ratio", "q_expected_calibration_error", "q_qini_curve",
+    "q_risk_coverage", "q_window_rank_semantics",
+    "q_quantile_treatment_effect",
 ]
 HEAVY_ROWS_ONLY = [
     "q_dedup_minhash_lsh", "q_ngram_jaccard", "q_dedup_containment",
@@ -214,6 +223,43 @@ MID_TIER_KEYS = [
     "q_feature_hash", "q_geo_radius_join", "q_graph_2hop",
     "q_group_vs_rest",
 ]
+
+
+def task_metrics(log_dir: str) -> dict[str, dict]:
+    """Per-key task metrics from the stopped session's event log: each key
+    runs under a job group named after it, so its stages are the stages
+    of the jobs in that group. Per key: the largest task peak execution
+    memory, the bytes spilled (memory and disk), the longest task's wall
+    time and the task count."""
+    (log,) = [os.path.join(log_dir, f) for f in os.listdir(log_dir)]
+    stage_key: dict[int, str] = {}
+    out: dict[str, dict] = {}
+    with open(log) as fh:
+        for line in fh:
+            ev = json.loads(line)
+            kind = ev["Event"]
+            if kind == "SparkListenerJobStart":
+                key = (ev.get("Properties") or {}).get("spark.jobGroup.id")
+                if key:
+                    for sid in ev["Stage IDs"]:
+                        stage_key[sid] = key
+            elif kind == "SparkListenerTaskEnd" and ev["Stage ID"] in stage_key:
+                info, m = ev["Task Info"], ev.get("Task Metrics") or {}
+                rec = out.setdefault(
+                    stage_key[ev["Stage ID"]],
+                    {"peak_exec_mem_bytes": 0, "spill_mem_bytes": 0,
+                     "spill_disk_bytes": 0, "longest_task_ms": 0, "tasks": 0},
+                )
+                rec["peak_exec_mem_bytes"] = max(
+                    rec["peak_exec_mem_bytes"], m.get("Peak Execution Memory", 0)
+                )
+                rec["spill_mem_bytes"] += m.get("Memory Bytes Spilled", 0)
+                rec["spill_disk_bytes"] += m.get("Disk Bytes Spilled", 0)
+                rec["longest_task_ms"] = max(
+                    rec["longest_task_ms"], info["Finish Time"] - info["Launch Time"]
+                )
+                rec["tasks"] += 1
+    return out
 
 
 def build_derived(spark) -> None:
@@ -563,7 +609,19 @@ def main() -> int:
         os.environ.setdefault(
             "SPARK_GRAFT_DRIVER_MEM", "80g" if COPIES >= 100 else "48g"
         )
-    spark = get_spark(f"{label}_replay")
+    # task metrics come from an event log under /tmp, read once the
+    # session has stopped (the listener bus is asynchronous)
+    log_dir = tempfile.mkdtemp(prefix=f"{label}_replay_events_")
+    spark = get_spark(
+        f"{label}_replay",
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": log_dir,
+            # one plain JSON-lines file (Spark 4 rolls and compresses by default)
+            "spark.eventLog.rolling.enabled": "false",
+            "spark.eventLog.compress": "false",
+        },
+    )
     build_derived(spark)
 
     con = duckdb.connect()
@@ -608,6 +666,7 @@ def main() -> int:
     failures: list[str] = []
     for key in twin_keys + rows_only:
         rec: dict = {}
+        spark.sparkContext.setJobGroup(key, key)
         t0 = time.perf_counter()
         try:
             sdf = REGISTRY[key](spark, OUT)
@@ -675,6 +734,20 @@ def main() -> int:
         )
         results[key] = rec
 
+    spark.sparkContext.setJobGroup("__cases__", "planted cases")
+    if only is None:
+        hot = hot_shingle_case(spark)
+        if not hot["ok"]:
+            failures.append("__hot_shingle_case__")
+        sim = simhash_band_case(spark)
+        if not sim["ok"]:
+            failures.append("__simhash_band_case__")
+    spark.stop()
+    for key, m in task_metrics(log_dir).items():
+        if key in results:
+            results[key].update(m)
+    shutil.rmtree(log_dir)
+
     art = os.path.join(sys_path, f"SCALE_{label}_replay.json")
     if only is not None:
         # merge mode: patch the named keys into the committed artifact
@@ -699,13 +772,6 @@ def main() -> int:
         print(f"\nmerged {len(results)} key(s) into {art}; "
               f"{len(failures)} failure(s)")
         return 1 if failures else 0
-
-    hot = hot_shingle_case(spark)
-    if not hot["ok"]:
-        failures.append("__hot_shingle_case__")
-    sim = simhash_band_case(spark)
-    if not sim["ok"]:
-        failures.append("__simhash_band_case__")
 
     payload = {
         "__meta__": {
